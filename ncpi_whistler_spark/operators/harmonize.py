@@ -6,13 +6,14 @@ target codings for (code, source-system), including the ``self`` entry that
 carries the original display text. Every downstream Harmonize* variant
 (functions/harmonize.py) is a filter/selector over that array.
 
-Scale design: config-scale maps (the reference's always are — harmony
-CSVs are human-authored) compile to a literal ``create_map`` expression
-driver-side, so harmonizing a column on a 100 TB fact table is a pure
-map-side expression: no join, nothing broadcast, and N harmonized columns
-are N expressions in one projection. Maps above the driver cap fall back
-to a grouped-and-broadcast hash join — still zero shuffle of the fact
-side.
+Scale design: maps of up to ``ConceptMap.MAX_DRIVER_ROWS`` rows (the
+reference's harmony CSVs are human-authored, so usually far fewer)
+compile to a literal ``create_map`` expression driver-side, so
+harmonizing a column on a 100 TB fact table is a pure map-side
+expression: no join, nothing broadcast, and N harmonized columns are N
+expressions in one projection. Larger maps, whose literal would make plan
+construction the cost, use a grouped-and-broadcast hash join — still zero
+shuffle of the fact side.
 """
 
 from __future__ import annotations
@@ -35,10 +36,10 @@ def harmonize(
     (whistle returns nil; empty array keeps downstream HOFs total)."""
     value = F.col(value_col) if isinstance(value_col, str) else value_col
     empty = F.array().cast("array<struct<code:string,display:string,system:string>>")
-    # Fast path: config-scale maps (the reference's always are — harmony
-    # CSVs are human-authored) compile to a create_map literal. Pure
-    # map-side expression: no join, no extra Spark jobs building the
-    # lookup, and on a 100 TB fact table no broadcast to ship.
+    # Fast path: maps of up to MAX_DRIVER_ROWS rows compile to a
+    # create_map literal. Pure map-side expression: no join, no extra
+    # Spark jobs building the lookup, and on a 100 TB fact table no
+    # broadcast to ship.
     table = concept_map.codings_lookup(local_system)
     if table is not None:
         if not table:
@@ -127,29 +128,3 @@ def add_display_columns_scoped(
             lkp, on=F.col(c).cast("string") == F.col(f"__d_{c}"), how="left"
         ).drop(f"__d_{c}")
     return out
-
-
-def harmonize_map_expr(
-    concept_map: ConceptMap, local_system: str
-) -> tuple[Column, Column]:
-    """Alternative zero-join form for very small maps: returns
-    (map_expr, keys) where map_expr is a ``create_map`` literal usable as
-    ``element_at(map, col)``. Driver-collects the map — only for
-    config-sized dictionaries (the reference's are always config-sized)."""
-    table = concept_map.codings_lookup(local_system)
-    if table is None:
-        raise ValueError("concept map too large for a literal map expression")
-    pairs: list[Column] = []
-    for lc, codings in table.items():
-        arr = F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("code"),
-                    F.lit(d).alias("display"),
-                    F.lit(s).alias("system"),
-                )
-                for c, d, s in codings
-            ]
-        )
-        pairs.extend([F.lit(lc), arr])
-    return F.create_map(*pairs), F.lit(list(table))

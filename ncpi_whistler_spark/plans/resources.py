@@ -610,6 +610,18 @@ def questionnaires(
     return spark.createDataFrame(rows, schema)
 
 
+def _harmony_rows(concept_map) -> list:
+    """The ConceptMap rows that feed the harmony vocabularies.
+
+    ObjectifyHarmony's gate (conceptmap.py:53): only rows with a table
+    name are used — unless none carry one (config-literal maps), in which
+    case every row is used with an empty table segment."""
+    rows = concept_map._collected()
+    if any(r["table_name"] for r in rows):
+        rows = [r for r in rows if r["table_name"]]
+    return rows
+
+
 def harmony_valuesets(spark, concept_map, study: StudyConfig) -> DataFrame:
     """G5 (valueset half): the two harmony ValueSets — "sources" (local
     codes grouped per (local system, table, parent variable) with
@@ -620,23 +632,11 @@ def harmony_valuesets(spark, concept_map, study: StudyConfig) -> DataFrame:
     row in file order, duplicating a local code that maps to several
     targets."""
     prefix = study.dd_prefix or study.identifier_prefix
-    rows = concept_map._collected() or []
     meta = _study_meta_dict(study)
-
-    def g(r, k):  # Row or prefilled dict; optional columns default ""
-        try:
-            return r[k] or ""
-        except (KeyError, ValueError):
-            return ""
-
-    # ObjectifyHarmony's gate (conceptmap.py:53): only rows with a table
-    # name feed the harmony vocabularies — unless none carry one
-    if any(g(r, "table_name") for r in rows):
-        rows = [r for r in rows if g(r, "table_name")]
     src_groups: dict[tuple, dict] = {}
     tgt_groups: dict[str, dict] = {}
-    for r in rows:
-        skey = (r["local_system"], g(r, "table_name"), g(r, "parent_varname"))
+    for r in _harmony_rows(concept_map):
+        skey = (r["local_system"], r["table_name"], r["parent_varname"])
         grp = src_groups.setdefault(
             skey,
             {
@@ -708,27 +708,14 @@ def harmony_conceptmap(spark, concept_map, study: StudyConfig) -> DataFrame:
     system) with constructed source CodeSystem urls and
     equivalence=equivalent targets.
 
-    Reference-exact: rows with an empty table_name are excluded (the
-    ObjectifyHarmony gate, conceptmap.py:53) — unless the map carries no
-    table names at all (config-literal maps), in which case all rows are
-    used with an empty table segment. Deviation (documented): groups/
-    elements/targets are code-sorted; the reference keeps file order."""
+    Reference-exact: rows pass the ObjectifyHarmony table-name gate
+    (``_harmony_rows``). Deviation (documented): groups/elements/targets
+    are code-sorted; the reference keeps file order."""
     prefix = study.dd_prefix or study.identifier_prefix
-    rows = concept_map._collected() or []
-
-    def g(r, k):
-        try:
-            return r[k] or ""
-        except (KeyError, ValueError):
-            return ""
-
-    any_table = any(g(r, "table_name") for r in rows)
-    if any_table:
-        rows = [r for r in rows if g(r, "table_name")]
     groups: dict[tuple, dict] = {}
-    for r in rows:
+    for r in _harmony_rows(concept_map):
         lcs = r["local_system"]
-        src_url = dd_system_url(prefix, "CodeSystem", None, g(r, "table_name"), lcs)
+        src_url = dd_system_url(prefix, "CodeSystem", None, r["table_name"], lcs)
         key = (src_url, r["system"])
         grp = groups.setdefault(key, {})
         el = grp.setdefault(r["local_code"], {"display": r["text"], "targets": {}})

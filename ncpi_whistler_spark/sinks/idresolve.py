@@ -22,6 +22,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ncpi_whistler_spark.operators.tuning import materialize_shared
+
 MAX_ROUNDS = 10  # reference fixpoint cap, wstlr/play.py:477-488
 
 ID_MAP_SCHEMA = "system string, identifier string, resource_type string, fhir_id string"
@@ -85,8 +87,14 @@ def load_fixpoint(
 
     Mirrors the reference's retry-until-fixpoint (E2) with the same
     ≤ ``max_rounds`` bound; leftovers are the invalid-reference set
-    (wstlr/load.py:195-222). Each round materializes once (cache) to
-    stop plan growth across iterations.
+    (wstlr/load.py:195-222).
+
+    Each round's resolved frame and id map go through
+    ``materialize_shared``: computed once, and on single-JVM ``local[N]``
+    masters checkpointed, which cuts the lineage so the plan of round N
+    does not nest every earlier round. On multi-JVM masters that helper
+    keeps the lineage by design — executor loss must stay recomputable —
+    so there the plan still grows with the round count.
     """
     pending = resources
     loaded_rounds: list[DataFrame] = []
@@ -95,7 +103,7 @@ def load_fixpoint(
         if not pending.take(1):
             break
         rounds += 1
-        resolved = resolve_references(pending, id_map, ref_cols).cache()
+        resolved = materialize_shared(resolve_references(pending, id_map, ref_cols))
         ready = resolved.where(~F.col("_unresolved"))
         if not ready.take(1):
             break  # no progress → remaining are invalid
@@ -108,7 +116,7 @@ def load_fixpoint(
             F.col(type_col).alias("resource_type"),
             F.sha1(F.col(f"{identifier_col}")[0]["value"]).alias("fhir_id"),
         )
-        id_map = id_map.unionByName(new_ids).cache()
+        id_map = materialize_shared(id_map.unionByName(new_ids))
         pending = resolved.where(F.col("_unresolved")).select(resources.columns)
     return FixpointResult(
         loaded_rounds=loaded_rounds,

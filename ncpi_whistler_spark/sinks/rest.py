@@ -283,10 +283,13 @@ def load_resources(
     idempotent: bool = True,
 ) -> DataFrame:
     """Load resource rows (resourceType, resource_json[, method]) through
-    the transport; returns per-type (ok, err) counts.
+    the transport; returns per-type (ok, err) counts. The load runs
+    during this call, each row sent once; evaluating the returned frame
+    sends nothing.
 
     Terminology types load first in a single partition (synchronous, the
-    reference's ordering constraint); the rest fan out over
+    reference's ordering constraint: that phase completes before the
+    next starts); the rest fan out over
     ``parallelism`` partitions — the thread-pool analog with backpressure
     by partition granularity.
 
@@ -306,17 +309,15 @@ def load_resources(
     terminology = resources.where(F.col("resourceType").isin(*SYNCHRONOUS_TYPES))
     rest = resources.where(~F.col("resourceType").isin(*SYNCHRONOUS_TYPES))
 
-    results = []
+    # each phase runs exactly once, here: the transport calls are side
+    # effects, so the returned frame holds the collected counts rather
+    # than a plan that would send again whenever it is evaluated
+    counts: list[tuple[str, int, int]] = []
     for df, n in ((terminology, 1), (rest, parallelism)):
-        rdd = df.repartition(n).rdd.mapPartitions(
+        counts += df.repartition(n).rdd.mapPartitions(
             lambda rows: _load_partition(rows, transport_factory, max_retries, sleep_fn)
-        )
-        results.append(
-            spark.createDataFrame(rdd, "resourceType string, ok long, err long")
-            if not rdd.isEmpty()
-            else spark.createDataFrame([], "resourceType string, ok long, err long")
-        )
-    out = results[0].unionByName(results[1])
+        ).collect()
+    out = spark.createDataFrame(counts, "resourceType string, ok long, err long")
     return out.groupBy("resourceType").agg(
         F.sum("ok").alias("ok"), F.sum("err").alias("err")
     )

@@ -7,8 +7,12 @@ the 4-tuple (local system, local code, system, code), curie-prefix target
 codes, and emit a nested ConceptMap with an implicit ``self`` group whose
 display is the local text.
 
-Spark design: the ConceptMap is a *small* mapping DataFrame — it exists to
-be broadcast. ``codings_df()`` pre-groups it to one row per
+Spark design: the ConceptMap is a mapping DataFrame whose deduplicated
+rows are collected to the driver once (``_collected``) — the harmony
+ConceptMap and ValueSet resources are single rows holding every edge, so
+they are built from that list. ``harmonize`` compiles maps of up to
+``MAX_DRIVER_ROWS`` rows into a literal ``create_map``; larger maps use
+``codings_df()``, which pre-groups the frame to one row per
 (local_code, local_system) with a deterministically-sorted
 ``array<struct<code,display,system>>``, so harmonizing a 100 TB fact column
 is a single broadcast-hash join with no shuffle of the fact side.
@@ -33,6 +37,9 @@ _HARMONY_COLS = {
     "display": "display",
     "code system": "system",
 }
+#: optional grouping columns (the harmony ValueSets, G5); ConceptMap
+#: defaults them to "" — the reference's value for absent columns
+_OPTIONAL_COLS = ("table_name", "parent_varname")
 
 
 def scan_harmony_csv(spark: SparkSession, paths: str | list[str]) -> DataFrame:
@@ -48,14 +55,7 @@ def scan_harmony_csv(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     if missing:
         raise ValueError(f"harmony file missing required columns: {missing}")
     cols = [F.col(lower[src]).alias(dst) for src, dst in _HARMONY_COLS.items()]
-    # optional grouping columns (used by the harmony ValueSets, G5):
-    # absent files get empty strings, matching the reference's defaults
-    for opt in ("table_name", "parent_varname"):
-        cols.append(
-            F.coalesce(F.col(lower[opt]), F.lit("")).alias(opt)
-            if opt in lower
-            else F.lit("").alias(opt)
-        )
+    cols += [F.col(lower[opt]).alias(opt) for opt in _OPTIONAL_COLS if opt in lower]
     return raw.select(*cols)
 
 
@@ -81,15 +81,24 @@ class ConceptMap:
     """A harmonization dictionary backed by a small mapping DataFrame.
 
     ``mappings`` columns: local_code, text, local_system, code, display,
-    system — one row per (local → target) edge, already deduped.
+    system, table_name, parent_varname — one row per (local → target)
+    edge, already deduped; the two grouping columns are "" when absent.
     """
 
-    #: cap for driver-side materialization (`codings_lookup`). Reference
-    #: concept maps are human-authored harmony CSVs — config scale, never
-    #: data scale — so this only guards against misuse.
+    #: largest map (in rows) that ``codings_lookup`` compiles to a literal
+    #: ``create_map`` expression; above it ``harmonize`` broadcast-joins
+    #: ``codings_df`` instead, since a literal of that many structs makes
+    #: the plan itself the cost
     MAX_DRIVER_ROWS = 10_000
 
     def __init__(self, mappings: DataFrame, curies: Mapping[str, str] | None = None):
+        for opt in _OPTIONAL_COLS:
+            mappings = mappings.withColumn(
+                opt,
+                F.coalesce(F.col(opt), F.lit(""))
+                if opt in mappings.columns
+                else F.lit(""),
+            )
         mappings = mappings.dropDuplicates(
             ["local_system", "local_code", "system", "code"]
         )  # A5, wstlr/conceptmap.py:410-428
@@ -98,8 +107,8 @@ class ConceptMap:
                 "code", curie_prefix_col(F.col("code"), F.col("system"), curies)
             )  # F6, wstlr/conceptmap.py:83-85
         self.mappings = mappings
-        # driver-side caches (config-scale maps only)
-        self._rows: list | None | bool = None  # None=unknown, False=too big
+        # driver-side caches
+        self._rows: list | None = None
         self._lookup_cache: dict[str, dict[str, list[tuple]]] = {}
 
     @classmethod
@@ -145,6 +154,7 @@ class ConceptMap:
                         "code": code,
                         "display": display,
                         "system": system,
+                        **dict.fromkeys(_OPTIONAL_COLS, ""),
                     }
                 )
             cm._rows = deduped
@@ -182,13 +192,11 @@ class ConceptMap:
             .agg(F.array_sort(F.collect_list("coding")).alias("codings"))
         )
 
-    def _collected(self) -> list | None:
-        """Mappings rows collected to the driver, or None when the map
-        exceeds MAX_DRIVER_ROWS (callers then use the DataFrame path)."""
+    def _collected(self) -> list:
+        """Every deduplicated mapping row, collected to the driver once."""
         if self._rows is None:
-            got = self.mappings.limit(self.MAX_DRIVER_ROWS + 1).collect()
-            self._rows = False if len(got) > self.MAX_DRIVER_ROWS else got
-        return self._rows if self._rows is not False else None
+            self._rows = self.mappings.collect()
+        return self._rows
 
     def codings_lookup(self, local_system: str) -> dict[str, list[tuple]] | None:
         """Driver-side twin of ``codings_df`` for one local_system:
@@ -203,7 +211,7 @@ class ConceptMap:
         if local_system in self._lookup_cache:
             return self._lookup_cache[local_system]
         rows = self._collected()
-        if rows is None:
+        if len(rows) > self.MAX_DRIVER_ROWS:
             return None
         out: dict[str, list[tuple]] = {}
         texts: dict[str, str] = {}
@@ -226,53 +234,6 @@ class ConceptMap:
         189-191). 'First' is made deterministic with min(display)."""
         return self.mappings.groupBy("local_system", "local_code").agg(
             F.min("display").alias("display")
-        )
-
-    def to_fhir_conceptmap(
-        self, cm_id: str, version: str = "v1", study_id: str | None = None
-    ) -> DataFrame:
-        """Nested FHIR ConceptMap shape (G5, wstlr/conceptmap.py:430-538):
-        group[] by (source-system, target-system), element[] per local code,
-        target[] per coding — two-level collect_list. ``study_id`` adds
-        the StudyMeta tag the reference stamps on the ConceptMap
-        (wlib_dd_conceptmap.wstl:72 + _study_meta.wstl:5-9)."""
-        m = self.mappings
-        elements = (
-            m.groupBy("local_system", "system", "local_code")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("code", "display"))
-                ).alias("target")
-            )
-            .groupBy("local_system", "system")
-            .agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("local_code").alias("code"), "target")
-                    )
-                ).alias("element")
-            )
-        )
-        meta_cols = []
-        if study_id is not None:
-            meta_cols = [
-                F.struct(
-                    F.array(
-                        F.struct(
-                            F.lit("https://ncpi-fhir.github.io/fhir-study-metadata").alias("system"),
-                            F.lit(study_id).alias("code"),
-                        )
-                    ).alias("tag")
-                ).alias("meta")
-            ]
-        return elements.select(
-            F.lit(cm_id).alias("id"),
-            F.lit("ConceptMap").alias("resourceType"),
-            *meta_cols,
-            F.lit(version).alias("version"),
-            F.col("local_system").alias("source"),
-            F.col("system").alias("target"),
-            "element",
         )
 
 

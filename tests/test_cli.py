@@ -131,6 +131,8 @@ def test_cli_buildcm_and_harmonyskel(spark, study_dir, tmp_path):  # noqa: F811
     doc = json.loads(open(cm_out).read())
     types = [r["resourceType"] for rs in doc.values() for r in rs]
     assert types.count("ConceptMap") == 1 and "ValueSet" in types
+    (cm,) = [r for rs in doc.values() for r in rs if r["resourceType"] == "ConceptMap"]
+    assert len(cm["group"]) >= 1
 
     skel = str(tmp_path / "skeleton.csv")
     rc = cli.main(["harmonyskel", str(study_dir / "study.yaml"), "--out", skel])

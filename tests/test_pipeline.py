@@ -239,6 +239,44 @@ def test_id_fixpoint(spark):
     assert len(invalid) == 1 and invalid[0]["identifier"][0]["value"] == "O2"
 
 
+def test_id_fixpoint_deep_chain_keeps_plan_small(spark):
+    """A 4-level reference chain loads one level per round, dangling
+    references end up exactly in the invalid set, and the invalid frame's
+    optimized plan stays small: each round's frames are materialized
+    (checkpointed on local masters), so the plan does not nest every
+    earlier round."""
+    ref = "struct<identifier:struct<system:string,value:string>>"
+    schema = (
+        "resourceType string, identifier array<struct<system:string,value:string>>, "
+        f"parent {ref}"
+    )
+
+    def res(level, i, parent):
+        return (
+            f"L{level}",
+            [{"system": "s/chain", "value": f"L{level}-{i}"}],
+            {"identifier": {"system": "s/chain", "value": parent}} if parent else None,
+        )
+
+    rows = [res(0, i, None) for i in range(6)]
+    for level in (1, 2, 3):
+        rows += [res(level, i, f"L{level - 1}-{i}") for i in range(6)]
+    dangling = [res(9, i, f"MISSING-{i}") for i in range(3)]
+    frame = spark.createDataFrame(rows + dangling, schema)
+
+    result = load_fixpoint(spark, frame, empty_id_map(spark), ["parent"])
+    assert [
+        sorted({r["resourceType"] for r in df.select("resourceType").collect()})
+        for df in result.loaded_rounds
+    ] == [["L0"], ["L1"], ["L2"], ["L3"]]
+    assert result.rounds == 5  # four loading rounds + one without progress
+    invalid = sorted(r["identifier"][0]["value"] for r in result.invalid.collect())
+    assert invalid == ["L9-0", "L9-1", "L9-2"]
+    assert result.id_map.count() == 24
+    plan = result.invalid._jdf.queryExecution().optimizedPlan().toString()
+    assert len(plan) < 100_000, len(plan)
+
+
 def test_rest_sink_with_backoff(spark):
     df = spark.createDataFrame(
         [
@@ -337,6 +375,45 @@ def test_rest_sink_partition_replay_is_idempotent(spark, tmp_path):
     assert ok2 == {"Patient": 20}
     assert len(os.listdir(ledger)) == created1, "replay double-created"
     assert not any(n.startswith("uncond-") for n in os.listdir(ledger))
+
+
+class _CallLogTransport:
+    """Counts transport calls on DISK (one file per call), so calls made
+    in Spark's separate Python worker processes are all seen."""
+
+    def __init__(self, log_dir: str):
+        self.log_dir = log_dir
+
+    def __call__(self, method, resource_type, body, headers=None):
+        import os
+        import uuid
+
+        from ncpi_whistler_spark.sinks.rest import LoadResult
+
+        with open(os.path.join(self.log_dir, uuid.uuid4().hex), "w") as fh:
+            fh.write(body)
+        return LoadResult(status=201, resource_type=resource_type)
+
+
+def test_rest_sink_sends_each_row_once(spark, tmp_path):
+    """Every row reaches the transport exactly once — the terminology
+    phase and the fanned-out phase alike — and evaluating the returned
+    counts again sends nothing."""
+    import os
+
+    rows = [("CodeSystem", f'{{"resourceType":"CodeSystem","id":"c{i}"}}') for i in range(3)]
+    rows += [("ValueSet", f'{{"resourceType":"ValueSet","id":"v{i}"}}') for i in range(2)]
+    rows += [("Patient", f'{{"resourceType":"Patient","id":"p{i}"}}') for i in range(12)]
+    df = spark.createDataFrame(rows, "resourceType string, resource_json string")
+    log = tmp_path / "calls"
+    log.mkdir()
+
+    counts = load_resources(df, lambda: _CallLogTransport(str(log)), parallelism=4)
+    assert len(os.listdir(log)) == len(rows)
+    by_type = {r["resourceType"]: (r["ok"], r["err"]) for r in counts.collect()}
+    assert by_type == {"CodeSystem": (3, 0), "ValueSet": (2, 0), "Patient": (12, 0)}
+    counts.collect()
+    assert len(os.listdir(log)) == len(rows)
 
 
 def test_rest_sink_conditional_create_header_shape(spark):

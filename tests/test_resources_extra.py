@@ -230,35 +230,93 @@ def test_harmony_valuesets(spark):
 
 def test_harmony_conceptmap_resource(spark, tmp_path):
     """G5 ConceptMap half on a reference-style harmony CSV (with
-    table_name): one resource, constructed source urls, equivalent
-    targets, and the empty-table gate."""
+    table_name): one resource with the StudyMeta tag
+    (wlib_dd_conceptmap.wstl:72), constructed source urls, group[] per
+    (source, target system), element[]/target[] sorted by code,
+    equivalent targets, and the empty-table gate."""
     from ncpi_whistler_spark.plans.resources import harmony_conceptmap
 
     harmony = tmp_path / "harmony.csv"
     harmony.write_text(
         "local code,text,local code system,code,display,code system,table_name,parent_varname\n"
-        "1,Male,sex,male,Male,http://hl7.org/fhir/administrative-gender,participant,sex\n"
         "2,Female,sex,female,Female,http://hl7.org/fhir/administrative-gender,participant,sex\n"
+        "1,Male,sex,male,Male,http://hl7.org/fhir/administrative-gender,participant,sex\n"
         "1,Male,sex,M,MaleV2,http://terminology.hl7.org/v2,participant,sex\n"
+        "1,Male,sex,1,Male1,http://terminology.hl7.org/v2,participant,sex\n"
         "x,Skipped,other,y,Y,http://z,,\n"
     )
     cm = ConceptMap.from_csv(spark, str(harmony))
     rows = harmony_conceptmap(spark, cm, STUDY).collect()
     assert len(rows) == 1
     r = rows[0]
-    assert r["identifier"]["value"] == "S.cm" or r["identifier"]["value"] == "S.concept-map"
+    assert r["resourceType"] == "ConceptMap"
+    assert r["meta"]["tag"][0]["code"] == "S"
+    assert r["identifier"]["value"] == "S.concept-map"
     assert r["sourceUri"].endswith("/S/sources")
     groups = {(grp["source"], grp["target"]): grp for grp in r["group"]}
     # the empty-table_name row is excluded (ObjectifyHarmony gate)
+    assert len(groups) == 2
     assert not any("other" in s for s, _ in groups)
-    gender = next(
-        grp for (s, t), grp in groups.items()
-        if t == "http://hl7.org/fhir/administrative-gender"
-    )
+    by_target = {t: grp for (_, t), grp in groups.items()}
+    gender = by_target["http://hl7.org/fhir/administrative-gender"]
     assert "/participant/sex" in gender["source"]
     els = {e["code"]: e for e in gender["element"]}
+    assert [e["code"] for e in gender["element"]] == ["1", "2"]
+    assert {c: [t["code"] for t in e["target"]] for c, e in els.items()} == {
+        "1": ["male"],
+        "2": ["female"],
+    }
     assert els["1"]["display"] == "Male"
     assert els["1"]["target"][0]["equivalence"] == "equivalent"
+    v2 = by_target["http://terminology.hl7.org/v2"]
+    assert [e["code"] for e in v2["element"]] == ["1"]
+    assert [t["code"] for t in v2["element"][0]["target"]] == ["1", "M"]
+
+
+def test_harmony_vocabulary_ignores_literal_map_cap(spark, tmp_path, monkeypatch):
+    """The harmony ConceptMap and ValueSets carry every row whether or not
+    the map is small enough for harmonize's literal create_map: building
+    the same CSV with MAX_DRIVER_ROWS below its row count gives equal
+    resources, while harmonize switches to the broadcast join."""
+    from ncpi_whistler_spark.plans.resources import (
+        harmony_conceptmap,
+        harmony_valuesets,
+    )
+
+    harmony = tmp_path / "harmony.csv"
+    lines = [
+        "local code,text,local code system,code,display,code system,table_name,parent_varname"
+    ]
+    for var in ("sex", "race", "status"):
+        for i in range(4):
+            lines.append(f"{i},T{i},{var},{var}{i},D{i},http://t/{var},participant,{var}")
+            lines.append(f"{i},T{i},{var},x{i},X{i},http://x,participant,{var}")
+    lines.append("u,Untabled,other,u,U,http://u,,")
+    harmony.write_text("\n".join(lines) + "\n")
+
+    def build():
+        cm = ConceptMap.from_csv(spark, str(harmony))
+        return (
+            cm,
+            harmony_conceptmap(spark, cm, STUDY).collect(),
+            harmony_valuesets(spark, cm, STUDY).collect(),
+        )
+
+    small, cm_rows, vs_rows = build()
+    assert small.codings_lookup("sex") is not None
+    monkeypatch.setattr(ConceptMap, "MAX_DRIVER_ROWS", 5)
+    large, cm_capped, vs_capped = build()
+    assert large.codings_lookup("sex") is None
+    assert cm_capped == cm_rows and vs_capped == vs_rows
+    assert len(large._collected()) == 25
+    groups = cm_capped[0]["group"]
+    assert len(groups) == 6
+    assert sum(len(e["target"]) for g in groups for e in g["element"]) == 24
+    by_name = {r["name"]: r for r in vs_capped}
+    sources = by_name["S.concept-map-vs.sources"]["compose"]["include"]
+    assert sorted(len(i["concept"]) for i in sources) == [4, 4, 4]
+    targets = by_name["S.concept-map-vs.targets"]["compose"]["include"]
+    assert sum(len(i["concept"]) for i in targets) == 16
 
 
 def test_profiles_flag(spark):

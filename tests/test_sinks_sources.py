@@ -128,31 +128,3 @@ def test_dd_csv_roundtrip(spark, tmp_path):
     assert [v.varname for v in dd2.variables] == ["participant_id", "sex"]
     assert dd2.variables[1].enumerations == {"1": "Male", "2": "Female"}
     assert dd2.variables[0].data_type == "string"
-
-
-def test_to_fhir_conceptmap_shape_and_meta(spark):
-    """G5 nested ConceptMap: group[] per (source, target system),
-    element[]/target[] sorted, StudyMeta tag when a study id is given
-    (wlib_dd_conceptmap.wstl:72)."""
-    from ncpi_whistler_spark.sources.harmony import ConceptMap
-
-    cm = ConceptMap.from_rows(
-        spark,
-        [
-            ("1", "Male", "sex", "male", "Male", "http://hl7.org/fhir/administrative-gender"),
-            ("2", "Female", "sex", "female", "Female", "http://hl7.org/fhir/administrative-gender"),
-            ("1", "Male", "sex", "M", "MaleV2", "http://terminology.hl7.org/v2"),
-        ],
-    )
-    rows = cm.to_fhir_conceptmap("cm1", study_id="STUDY1").collect()
-    assert {r["resourceType"] for r in rows} == {"ConceptMap"}
-    assert all(r["meta"]["tag"][0]["code"] == "STUDY1" for r in rows)
-    by_target = {r["target"]: r for r in rows}
-    gender = by_target["http://hl7.org/fhir/administrative-gender"]
-    assert gender["source"] == "sex"
-    els = {e["code"]: [t["code"] for t in e["target"]] for e in gender["element"]}
-    assert els == {"1": ["male"], "2": ["female"]}
-    v2 = by_target["http://terminology.hl7.org/v2"]
-    assert {e["code"] for e in v2["element"]} == {"1"}
-    # without a study id there is no meta column at all
-    assert "meta" not in cm.to_fhir_conceptmap("cm2").columns
