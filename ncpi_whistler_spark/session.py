@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 #: Conf applied to every session the engine creates. All are runtime-safe
@@ -59,6 +60,45 @@ STATE_STORE_PROVIDERS: dict[str, str] = {
 }
 
 
+def _new_session(
+    app_name: str, master: str | None, explicit: dict[str, str]
+) -> SparkSession:
+    if master is None:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS")
+        master = f"local[{cpus}]" if cpus else "local[*]"
+
+    defaults = dict(ENGINE_CONF)
+    # local[N]: one shuffle partition per core is the right grain;
+    # AQE coalesces further when maps are small.
+    defaults["spark.sql.shuffle.partitions"] = str(os.cpu_count() or 8)
+    if master.startswith("local"):
+        # In local mode the driver JVM IS the executor; Spark's 1g default
+        # heap OOMs real workloads (first seen: 20k-doc shingle join).
+        # Static conf — only effective for the session that starts the JVM.
+        defaults["spark.driver.memory"] = os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", "32g"
+        )
+        # ~90 registry queries x whole-stage codegen ≈ thousands of
+        # generated classes; HotSpot's 240m default code cache fills and
+        # silently stops JIT-compiling (later queries run interpreted).
+        defaults["spark.driver.extraJavaOptions"] = "-XX:ReservedCodeCacheSize=512m"
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        # spark-submit started the driver JVM with its --conf as launch
+        # conf: fill only what it left unset. SparkConf() reads that only
+        # once the gateway is connected; before, it is an empty dict.
+        SparkContext._ensure_initialized()
+        launched = SparkConf()
+        defaults = {k: v for k, v in defaults.items() if not launched.contains(k)}
+    spark = (
+        SparkSession.builder.appName(app_name)
+        .master(master)
+        .config(map={**defaults, **explicit})
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
 def get_spark(
     app_name: str = "ncpi-whistler-spark",
     master: str | None = None,
@@ -66,7 +106,19 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
     state_store: str | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine defaults.
+    """Return the running SparkSession, or build one with the engine defaults.
+
+    Running session (from any thread): it is returned as it is, with only
+    what the caller passed applied on top: ``shuffle_partitions`` when not
+    None, ``extra_conf`` (static keys are ignored with a warning) and
+    ``state_store``. Neither :data:`ENGINE_CONF` nor the per-core width nor
+    ``app_name``/``master`` touch it, so an in-process CLI call leaves its
+    caller's session as it was.
+
+    New session: :data:`ENGINE_CONF`, one shuffle partition per core and,
+    on local masters, the driver heap and code-cache defaults fill every
+    key the launch has not set (``spark-submit --conf``, say);
+    ``shuffle_partitions`` and ``extra_conf`` override both.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (all cores when the
     env var is unset); on a real cluster pass ``None`` and let spark-submit
@@ -75,44 +127,25 @@ def get_spark(
     ``state_store`` selects the streaming state-store backend for queries
     started on this session: a :data:`STATE_STORE_PROVIDERS` key
     ("hdfs"/"rocksdb") or a full provider class name. Runtime-settable,
-    so it also applies when ``getOrCreate`` returns an existing session.
+    so it also applies to a running session.
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{cpus}]" if cpus else "local[*]"
+    explicit: dict[str, str] = {}
+    if shuffle_partitions is not None:
+        explicit["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    explicit.update(extra_conf or {})
 
-    builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(ENGINE_CONF)
-    if master.startswith("local"):
-        # In local mode the driver JVM IS the executor; Spark's 1g default
-        # heap OOMs real workloads (first seen: 20k-doc shingle join).
-        # Static conf — only effective for the session that starts the JVM.
-        conf.setdefault(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
-        )
-        # ~90 registry queries x whole-stage codegen ≈ thousands of
-        # generated classes; HotSpot's 240m default code cache fills and
-        # silently stops JIT-compiling (later queries run interpreted).
-        conf.setdefault(
-            "spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=512m"
-        )
-    if shuffle_partitions is None:
-        # local[N]: one shuffle partition per core is the right grain;
-        # AQE coalesces further when maps are small.
-        shuffle_partitions = os.cpu_count() or 8
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    # What getOrCreate itself checks; getActiveSession is per JVM thread
+    # and misses a session another thread made.
+    spark = SparkSession._instantiatedSession
+    if spark is None or spark._sc._jsc is None:
+        spark = _new_session(app_name, master, explicit)
+    elif explicit:
+        SparkSession.builder.config(map=explicit).getOrCreate()
     if state_store is not None:
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass",
             STATE_STORE_PROVIDERS.get(state_store, state_store),
         )
-    spark.sparkContext.setLogLevel("ERROR")
     return spark
 
 
