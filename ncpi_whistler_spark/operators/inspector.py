@@ -1,25 +1,35 @@
 """Pre-load sanity inspections (E8; reference wstlr/inspector.py:27-97) and
 module summaries (A3; wstlr/module_summary.py:9-41) as DataFrame checks.
 
-Each check returns a DataFrame of violations — empty means pass — so the
-whole validation suite composes into one job and scales with the data.
+Each check returns a DataFrame of violations — empty means pass — and
+``run_inspections`` counts the whole suite in one aggregation over the
+resources, so it scales with the data and scans it once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+
+def _identifier() -> Column:
+    return F.get_json_object("resource_json", "$.identifier[0].value")
+
+
+def _no_meta_tag() -> Column:
+    return F.get_json_object("resource_json", "$.meta.tag[0].code").isNull()
+
+
+def _observation_without_code() -> Column:
+    code = F.get_json_object("resource_json", "$.code")
+    return (F.col("resourceType") == "Observation") & code.isNull()
 
 
 def duplicate_identifiers(resources: DataFrame) -> DataFrame:
     """Identifiers used by more than one resource (the reference's
     duplicate-identifier check, wstlr/inspector.py:27-63)."""
-    ident = F.get_json_object("resource_json", "$.identifier[0].value")
     return (
-        resources.select(
-            "resourceType", ident.alias("identifier")
-        )
+        resources.select("resourceType", _identifier().alias("identifier"))
         .where(F.col("identifier").isNotNull())
         .groupBy("resourceType", "identifier")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -30,18 +40,16 @@ def duplicate_identifiers(resources: DataFrame) -> DataFrame:
 def missing_meta_tag(resources: DataFrame) -> DataFrame:
     """Resources without the required study meta.tag
     (wstlr/inspector.py:63-77)."""
-    tag = F.get_json_object("resource_json", "$.meta.tag[0].code")
-    return resources.where(tag.isNull()).select(
+    return resources.where(_no_meta_tag()).select(
         "module", "resourceType", "resource_json"
     )
 
 
 def observations_without_code(resources: DataFrame) -> DataFrame:
     """Observation.code required (wstlr/inspector.py:79-97)."""
-    code = F.get_json_object("resource_json", "$.code")
-    return resources.where(
-        (F.col("resourceType") == "Observation") & code.isNull()
-    ).select("module", "resource_json")
+    return resources.where(_observation_without_code()).select(
+        "module", "resource_json"
+    )
 
 
 def module_summary(resources: DataFrame) -> DataFrame:
@@ -61,9 +69,23 @@ def module_summary(resources: DataFrame) -> DataFrame:
 
 def run_inspections(resources: DataFrame) -> dict[str, int]:
     """Run the suite; returns violation counts keyed by check name (the
-    reference prints warnings — callers decide whether to fail)."""
-    return {
-        "duplicate_identifiers": duplicate_identifiers(resources).count(),
-        "missing_meta_tag": missing_meta_tag(resources).count(),
-        "observations_without_code": observations_without_code(resources).count(),
-    }
+    reference prints warnings — callers decide whether to fail).
+
+    One aggregation over (resourceType, identifier) groups counts all three
+    checks, so the suite is one scan of the resources, not one per check.
+    """
+    per_identifier = resources.groupBy(
+        "resourceType", _identifier().alias("identifier")
+    ).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_if(_no_meta_tag()).alias("no_tag"),
+        F.count_if(_observation_without_code()).alias("no_code"),
+    )
+    return per_identifier.agg(
+        F.count_if(
+            F.col("identifier").isNotNull() & (F.col("n") > 1)
+        ).alias("duplicate_identifiers"),
+        # a sum over no groups is NULL
+        F.coalesce(F.sum("no_tag"), F.lit(0)).alias("missing_meta_tag"),
+        F.coalesce(F.sum("no_code"), F.lit(0)).alias("observations_without_code"),
+    ).first().asDict()

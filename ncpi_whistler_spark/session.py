@@ -63,9 +63,23 @@ STATE_STORE_PROVIDERS: dict[str, str] = {
 def _new_session(
     app_name: str, master: str | None, explicit: dict[str, str]
 ) -> SparkSession:
-    if master is None:
+    launched: SparkConf | None = None
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        # spark-submit started the driver JVM with its --master and --conf
+        # as launch conf. SparkConf() reads that only once the gateway is
+        # connected; before, it is an empty dict.
+        SparkContext._ensure_initialized()
+        launched = SparkConf()
+    builder = SparkSession.builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
+    elif launched is not None:
+        # keep the launch's master; the local-only defaults follow it
+        master = launched.get("spark.master", "local[*]")
+    else:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
+        builder = builder.master(master)
 
     defaults = dict(ENGINE_CONF)
     # local[N]: one shuffle partition per core is the right grain;
@@ -82,19 +96,10 @@ def _new_session(
         # generated classes; HotSpot's 240m default code cache fills and
         # silently stops JIT-compiling (later queries run interpreted).
         defaults["spark.driver.extraJavaOptions"] = "-XX:ReservedCodeCacheSize=512m"
-    if "PYSPARK_GATEWAY_PORT" in os.environ:
-        # spark-submit started the driver JVM with its --conf as launch
-        # conf: fill only what it left unset. SparkConf() reads that only
-        # once the gateway is connected; before, it is an empty dict.
-        SparkContext._ensure_initialized()
-        launched = SparkConf()
+    if launched is not None:
+        # fill only what the launch left unset
         defaults = {k: v for k, v in defaults.items() if not launched.contains(k)}
-    spark = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config(map={**defaults, **explicit})
-        .getOrCreate()
-    )
+    spark = builder.config(map={**defaults, **explicit}).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
@@ -121,8 +126,9 @@ def get_spark(
     ``shuffle_partitions`` and ``extra_conf`` override both.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (all cores when the
-    env var is unset); on a real cluster pass ``None`` and let spark-submit
-    decide.
+    env var is unset); under spark-submit it defaults to the launch's
+    ``--master``, which also decides whether the local-only defaults
+    apply.
 
     ``state_store`` selects the streaming state-store backend for queries
     started on this session: a :data:`STATE_STORE_PROVIDERS` key

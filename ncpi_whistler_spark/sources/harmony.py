@@ -10,12 +10,14 @@ display is the local text.
 Spark design: the ConceptMap is a mapping DataFrame whose deduplicated
 rows are collected to the driver once (``_collected``) — the harmony
 ConceptMap and ValueSet resources are single rows holding every edge, so
-they are built from that list. ``harmonize`` compiles maps of up to
-``MAX_DRIVER_ROWS`` rows into a literal ``create_map``; larger maps use
-``codings_df()``, which pre-groups the frame to one row per
-(local_code, local_system) with a deterministically-sorted
-``array<struct<code,display,system>>``, so harmonizing a 100 TB fact column
-is a single broadcast-hash join with no shuffle of the fact side.
+they are built from that list. ``codings_df()`` pre-groups the frame to
+one row per (local_code, local_system) with a deterministically-sorted
+``array<struct<code,display,system>>``; ``operators.harmonize`` folds the
+rows of one local_system into a single broadcast map, so harmonizing a
+100 TB fact column is a map lookup with no shuffle of the fact side, and
+the plan does not grow with the map. ``read_code_details`` reads the
+extractor's value-keyed display map, which ``add_display_columns`` looks
+up the same way.
 """
 
 from __future__ import annotations
@@ -85,12 +87,6 @@ class ConceptMap:
     edge, already deduped; the two grouping columns are "" when absent.
     """
 
-    #: largest map (in rows) that ``codings_lookup`` compiles to a literal
-    #: ``create_map`` expression; above it ``harmonize`` broadcast-joins
-    #: ``codings_df`` instead, since a literal of that many structs makes
-    #: the plan itself the cost
-    MAX_DRIVER_ROWS = 10_000
-
     def __init__(self, mappings: DataFrame, curies: Mapping[str, str] | None = None):
         for opt in _OPTIONAL_COLS:
             mappings = mappings.withColumn(
@@ -107,9 +103,8 @@ class ConceptMap:
                 "code", curie_prefix_col(F.col("code"), F.col("system"), curies)
             )  # F6, wstlr/conceptmap.py:83-85
         self.mappings = mappings
-        # driver-side caches
+        # driver-side cache of _collected()
         self._rows: list | None = None
-        self._lookup_cache: dict[str, dict[str, list[tuple]]] = {}
 
     @classmethod
     def from_csv(
@@ -136,9 +131,9 @@ class ConceptMap:
         )
         cm = cls(df, curies)
         if not curies:
-            # rows are already on the driver — prefill the cache so the
-            # literal-map path never runs a Spark job (same keep-one
-            # dedupe as __init__'s dropDuplicates)
+            # rows are already on the driver — prefill the cache so
+            # _collected() never runs a Spark job (same keep-one dedupe
+            # as __init__'s dropDuplicates)
             seen: set[tuple] = set()
             deduped = []
             for lc, text, ls, code, display, system in rows:
@@ -165,31 +160,23 @@ class ConceptMap:
         *plus* the self coding (code=local_code, display=text,
         system='self'; reference: wstlr/conceptmap.py:445-447).
 
-        The array is sorted by (system, code) — the reference relies on
-        file order (A7, wstlr/conceptmap.py:455-469); a distributed engine
-        needs an explicit deterministic order instead.
+        The array is sorted by struct order (code, display, system), nulls
+        first — the reference relies on file order (A7,
+        wstlr/conceptmap.py:455-469); a distributed engine needs an
+        explicit deterministic order instead.
         """
-        m = self.mappings
-        targets = m.select(
-            "local_code",
-            "local_system",
-            F.struct("code", "display", "system").alias("coding"),
+        self_coding = F.struct(
+            F.col("local_code").alias("code"),
+            F.first("text").alias("display"),
+            F.lit(SELF_SYSTEM).alias("system"),
         )
-        selfs = m.select("local_code", "local_system", "text").dropDuplicates(
-            ["local_code", "local_system"]
-        ).select(
-            "local_code",
-            "local_system",
-            F.struct(
-                F.col("local_code").alias("code"),
-                F.col("text").alias("display"),
-                F.lit(SELF_SYSTEM).alias("system"),
-            ).alias("coding"),
-        )
-        return (
-            targets.unionByName(selfs)
-            .groupBy("local_code", "local_system")
-            .agg(F.array_sort(F.collect_list("coding")).alias("codings"))
+        return self.mappings.groupBy("local_code", "local_system").agg(
+            F.array_sort(
+                F.concat(
+                    F.collect_list(F.struct("code", "display", "system")),
+                    F.array(self_coding),
+                )
+            ).alias("codings")
         )
 
     def _collected(self) -> list:
@@ -197,44 +184,6 @@ class ConceptMap:
         if self._rows is None:
             self._rows = self.mappings.collect()
         return self._rows
-
-    def codings_lookup(self, local_system: str) -> dict[str, list[tuple]] | None:
-        """Driver-side twin of ``codings_df`` for one local_system:
-        ``local_code → [(code, display, system), ...]`` with the self
-        coding included and the exact ordering ``array_sort`` would give
-        (struct field order (code, display, system); null fields first,
-        matching Spark's ascending null-first struct comparison).
-
-        Returns None when the map exceeds MAX_DRIVER_ROWS; used by
-        ``operators.harmonize`` to compile config-scale maps into literal
-        ``create_map`` expressions — zero joins, zero extra jobs."""
-        if local_system in self._lookup_cache:
-            return self._lookup_cache[local_system]
-        rows = self._collected()
-        if len(rows) > self.MAX_DRIVER_ROWS:
-            return None
-        out: dict[str, list[tuple]] = {}
-        texts: dict[str, str] = {}
-        for r in rows:
-            if r["local_system"] != local_system:
-                continue
-            lc = r["local_code"]
-            out.setdefault(lc, []).append((r["code"], r["display"], r["system"]))
-            texts.setdefault(lc, r["text"])
-        key = lambda t: tuple((x is not None, x or "") for x in t)  # noqa: E731
-        for lc, codings in out.items():
-            codings.append((lc, texts[lc], SELF_SYSTEM))
-            codings.sort(key=key)
-        self._lookup_cache[local_system] = out
-        return out
-
-    def display_map_df(self) -> DataFrame:
-        """(local_system, local_code) → first display, for the extractor's
-        ``<col>_display`` derivation (P2, wstlr/extractor.py:274-282,
-        189-191). 'First' is made deterministic with min(display)."""
-        return self.mappings.groupBy("local_system", "local_code").agg(
-            F.min("display").alias("display")
-        )
 
 
 #: reference's default terminology url base (wstlr/__init__.py:14)

@@ -138,19 +138,113 @@ def test_display_columns(spark):
     rows = {r["pid"]: r for r in out.collect()}
     assert rows["P1"]["race_display"] == "White(display)"
     assert rows["P2"]["race_display"] is None
+    # an empty map adds nothing
+    df = spark.createDataFrame([("P1", "White")], "pid string, race string")
+    assert add_display_columns(df, ["race"], {}) is df
 
-    # scoped variant: per-column local_system
-    from ncpi_whistler_spark.operators.harmonize import add_display_columns_scoped
 
-    cm = ConceptMap.from_rows(
-        spark,
-        [("White", "White", "race", "2106-3", "White", "urn:oid:2.16.840.1.113883.6.238")],
+def _sort_key(coding):
+    # array_sort's ascending struct order: field by field, nulls first
+    return tuple((x is not None, x or "") for x in coding)
+
+
+def _codings_oracle(rows, local_system):
+    """Plain-Python $HarmonizeCode: local_code → every target coding plus
+    the self coding, deduplicated like ConceptMap and array_sort-ordered."""
+    out: dict[str, list] = {}
+    texts: dict[str, str] = {}
+    seen = set()
+    for lc, text, ls, code, display, system in rows:
+        if ls != local_system or (ls, lc, system, code) in seen:
+            continue
+        seen.add((ls, lc, system, code))
+        out.setdefault(lc, []).append((code, display, system))
+        texts.setdefault(lc, text)
+    for lc, codings in out.items():
+        codings.append((lc, texts[lc], H.SELF_SYSTEM))
+        codings.sort(key=_sort_key)
+    return out
+
+
+HARMONY_ROWS = [
+    ("1", "Male", "sex", "male", "Male", "http://hl7.org/fhir/administrative-gender"),
+    ("1", "Male", "sex", "M", None, None),
+    ("1", "Male", "sex", "M", None, None),  # duplicate edge: dropped
+    ("1", "Male", "sex", "A", "Any", None),
+    ("1", "Male", "sex", "m", None, "http://x"),
+    ("2", "Female", "sex", "female", "Female", "http://hl7.org/fhir/administrative-gender"),
+    ("2", "Female", "sex", None, "no code", "http://x"),
+    ("10", None, "sex", "other", "Other", "http://x"),
+    ("1", "White", "race", "2106-3", "White", "urn:oid:2.16.840.1.113883.6.238"),
+    (None, "no code", "sex", "z", "Z", "http://x"),
+]
+
+
+@pytest.mark.parametrize("local_system", ["sex", "race", "no-such-system"])
+def test_harmonize_matches_python_oracle(spark, local_system):
+    cm = ConceptMap.from_rows(spark, HARMONY_ROWS)
+    want = _codings_oracle(HARMONY_ROWS, local_system)
+    # an integer value column: looked up by its string form
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate([1, 2, 10, 3, None, 1])], "rid int, code int"
     )
-    df = spark.createDataFrame([("P1", "White"), ("P2", "Other")], "pid string, race string")
-    out2 = add_display_columns_scoped(df, ["race"], cm)
-    rows2 = {r["pid"]: r for r in out2.collect()}
-    assert rows2["P1"]["race_display"] == "White"
-    assert rows2["P2"]["race_display"] is None
+    got = {
+        r["rid"]: [tuple(c) for c in r["codings"]]
+        for r in harmonize(df, "code", local_system, cm).collect()
+    }
+    for rid, value in enumerate([1, 2, 10, 3, None, 1]):
+        # unmapped and null values: an empty array, never NULL (the
+        # null local code of the map matches nothing)
+        assert got[rid] == ([] if value is None else want.get(str(value), [])), (rid, value)
+    if local_system == "sex":
+        assert len(got[0]) == 5 and ("1", "Male", H.SELF_SYSTEM) in got[0]
+        assert got[1][0] == (None, "no code", "http://x")
+
+
+def test_display_columns_match_dict_lookup(spark, tmp_path):
+    from ncpi_whistler_spark.sources.harmony import read_code_details
+
+    harmony = tmp_path / "harmony.csv"
+    harmony.write_text(
+        "local code,text,local code system,code,display,code system\n"
+        "1,Male,sex,male,Male,http://g\n"
+        "2,Female,sex,female,Female,http://g\n"
+        "1,One,count,one,First one,http://n\n"  # later row wins for key 1
+        "White,White,race,2106-3,White race,urn:r\n"
+        ",blank,race,x,Blank,urn:r\n"
+        "short\n"  # a row missing every other field: a null display
+    )
+    # a file whose short row leaves the local code itself null
+    tail = tmp_path / "tail.csv"
+    tail.write_text("code system,display,local code\nhttp://x,Orphan\n")
+    details = read_code_details([str(harmony), str(tail)])
+    assert details["1"] == "First one"
+    assert details["short"] is None and details[None] == "Orphan"
+    rows = [("P1", 1, "White", None), ("P2", 2, "1", "2"), ("P3", 3, "short", "")]
+    df = spark.createDataFrame(rows, "pid string, n int, race string, other string")
+    cols = ["pid", "n", "race", "other"]
+    got = add_display_columns(df, cols, details).collect()
+    assert got[0].asDict().keys() >= {c + "_display" for c in cols}
+    by_pid = {r["pid"]: r for r in got}
+    for row in rows:
+        for c, v in zip(cols, row):
+            want = None if v is None else details.get(str(v))
+            assert by_pid[row[0]][c + "_display"] == want, (row[0], c)
+    assert by_pid["P3"]["other_display"] == "Blank"
+
+
+def test_display_columns_plan_does_not_grow_with_the_map(spark):
+    """The lookup is one broadcast map row, not a literal: the analyzed
+    plan of 12 display columns is the same size at 60 and 11,000 keys."""
+    cols = [f"c{i}" for i in range(12)]
+    df = spark.createDataFrame([tuple("k1" for _ in cols)], ", ".join(f"{c} string" for c in cols))
+
+    def plan_len(n):
+        out = add_display_columns(df, cols, {f"k{i}": f"v{i}" for i in range(n)})
+        return len(out._jdf.queryExecution().analyzed().toString())
+
+    small, large = plan_len(60), plan_len(11_000)
+    assert abs(small - large) < 300, (small, large)
 
 
 def test_curie_prefixing(spark):

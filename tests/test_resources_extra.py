@@ -273,50 +273,46 @@ def test_harmony_conceptmap_resource(spark, tmp_path):
     assert [t["code"] for t in v2["element"][0]["target"]] == ["1", "M"]
 
 
-def test_harmony_vocabulary_ignores_literal_map_cap(spark, tmp_path, monkeypatch):
-    """The harmony ConceptMap and ValueSets carry every row whether or not
-    the map is small enough for harmonize's literal create_map: building
-    the same CSV with MAX_DRIVER_ROWS below its row count gives equal
-    resources, while harmonize switches to the broadcast join."""
+def test_harmony_vocabulary_keeps_every_group_of_a_large_map(spark, tmp_path):
+    """A harmony map of more than 10,000 rows keeps every ConceptMap group
+    and edge and every ValueSet code, and harmonize looks it up like a
+    small one."""
     from ncpi_whistler_spark.plans.resources import (
         harmony_conceptmap,
         harmony_valuesets,
     )
 
+    n_vars, n_codes = 30, 170
     harmony = tmp_path / "harmony.csv"
     lines = [
         "local code,text,local code system,code,display,code system,table_name,parent_varname"
     ]
-    for var in ("sex", "race", "status"):
-        for i in range(4):
-            lines.append(f"{i},T{i},{var},{var}{i},D{i},http://t/{var},participant,{var}")
+    for v in range(n_vars):
+        var = f"v{v}"
+        for i in range(n_codes):
+            lines.append(f"{i},T{i},{var},{var}-{i},D{i},http://t/{var},participant,{var}")
             lines.append(f"{i},T{i},{var},x{i},X{i},http://x,participant,{var}")
     lines.append("u,Untabled,other,u,U,http://u,,")
     harmony.write_text("\n".join(lines) + "\n")
+    assert len(lines) - 1 > 10_000
 
-    def build():
-        cm = ConceptMap.from_csv(spark, str(harmony))
-        return (
-            cm,
-            harmony_conceptmap(spark, cm, STUDY).collect(),
-            harmony_valuesets(spark, cm, STUDY).collect(),
-        )
-
-    small, cm_rows, vs_rows = build()
-    assert small.codings_lookup("sex") is not None
-    monkeypatch.setattr(ConceptMap, "MAX_DRIVER_ROWS", 5)
-    large, cm_capped, vs_capped = build()
-    assert large.codings_lookup("sex") is None
-    assert cm_capped == cm_rows and vs_capped == vs_rows
-    assert len(large._collected()) == 25
-    groups = cm_capped[0]["group"]
-    assert len(groups) == 6
-    assert sum(len(e["target"]) for g in groups for e in g["element"]) == 24
-    by_name = {r["name"]: r for r in vs_capped}
+    cm = ConceptMap.from_csv(spark, str(harmony))
+    assert len(cm._collected()) == len(lines) - 1
+    groups = harmony_conceptmap(spark, cm, STUDY).collect()[0]["group"]
+    assert len(groups) == 2 * n_vars
+    assert sum(len(e["target"]) for g in groups for e in g["element"]) == 2 * n_vars * n_codes
+    by_name = {r["name"]: r for r in harmony_valuesets(spark, cm, STUDY).collect()}
     sources = by_name["S.concept-map-vs.sources"]["compose"]["include"]
-    assert sorted(len(i["concept"]) for i in sources) == [4, 4, 4]
+    assert sorted(len(i["concept"]) for i in sources) == [n_codes] * n_vars
     targets = by_name["S.concept-map-vs.targets"]["compose"]["include"]
-    assert sum(len(i["concept"]) for i in targets) == 16
+    assert sum(len(i["concept"]) for i in targets) == n_vars * n_codes + n_codes
+
+    df = spark.createDataFrame([("P1", "7"), ("P2", "nope")], "pid string, c string")
+    got = {r["pid"]: r["codings"] for r in harmonize(df, "c", "v3", cm).collect()}
+    assert [tuple(c) for c in got["P1"]] == [
+        ("7", "T7", "self"), ("v3-7", "D7", "http://t/v3"), ("x7", "X7", "http://x")
+    ]
+    assert got["P2"] == []
 
 
 def test_profiles_flag(spark):

@@ -62,16 +62,15 @@ spark.stop()
 """
 
 
-@pytest.mark.skipif(
+needs_spark_submit = pytest.mark.skipif(
     shutil.which("spark-submit") is None, reason="needs spark-submit on PATH"
 )
-def test_get_spark_keeps_spark_submit_conf(tmp_path):
-    aqe = "spark.sql.adaptive.enabled"
-    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def _submit(tmp_path, keys: list[str], *launch: str) -> dict:
+    """Run get_spark() in a spark-submit child; the conf values it sees."""
     script = tmp_path / "probe.py"
-    script.write_text(
-        textwrap.dedent(_PROBE).format(keys=[WIDTH, aqe, BROADCAST, nanos])
-    )
+    script.write_text(textwrap.dedent(_PROBE).format(keys=keys))
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(
         os.environ,
@@ -80,24 +79,40 @@ def test_get_spark_keeps_spark_submit_conf(tmp_path):
         ),
         PYSPARK_PYTHON=sys.executable,
         PYSPARK_DRIVER_PYTHON=sys.executable,
+        # a local default that differs from every --master used below
+        SPARK_GRAFT_CPUS="3",
     )
     proc = subprocess.run(
-        [
-            "spark-submit",
-            "--master", "local[2]",
-            "--driver-memory", "1g",
-            "--conf", f"{WIDTH}=3",
-            "--conf", f"{aqe}=false",
-            str(script),
-        ],
+        ["spark-submit", "--driver-memory", "1g", *launch, str(script)],
         env=env, capture_output=True, text=True, timeout=300,
     )
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("PROBE ")]
     assert proc.returncode == 0 and lines, proc.stderr[-3000:]
-    got = json.loads(lines[-1][len("PROBE "):])
+    return json.loads(lines[-1][len("PROBE "):])
+
+
+@needs_spark_submit
+def test_get_spark_keeps_spark_submit_conf(tmp_path):
+    aqe = "spark.sql.adaptive.enabled"
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    got = _submit(
+        tmp_path,
+        [WIDTH, aqe, BROADCAST, nanos],
+        "--master", "local[2]",
+        "--conf", f"{WIDTH}=3",
+        "--conf", f"{aqe}=false",
+    )
     # the launch's --conf wins over the engine defaults
     assert got[WIDTH] == "3"
     assert got[aqe] == "false"
     # keys the launch left unset still get them
     assert got[BROADCAST] == ENGINE_CONF[BROADCAST]
     assert got[nanos] == ENGINE_CONF[nanos]
+
+
+@needs_spark_submit
+def test_get_spark_keeps_spark_submit_master(tmp_path):
+    # get_spark(master=None) must not replace the launch's --master with
+    # the local[$SPARK_GRAFT_CPUS] default
+    got = _submit(tmp_path, ["spark.master"], "--master", "local[2]")
+    assert got["spark.master"] == "local[2]"

@@ -9,6 +9,7 @@ from ncpi_whistler_spark.operators.inspector import (
     duplicate_identifiers,
     missing_meta_tag,
     module_summary,
+    observations_without_code,
     run_inspections,
 )
 from ncpi_whistler_spark.sinks.ledger import (
@@ -56,6 +57,47 @@ def test_parse_bundle_and_inspect(spark):
     checks = run_inspections(res)
     assert checks["duplicate_identifiers"] == 1
     assert checks["observations_without_code"] == 1
+
+
+def test_run_inspections_counts_each_check_in_one_pass(spark):
+    """Planted violations of every kind: the one-pass suite gives exactly
+    the counts of the three separate checks."""
+    import json
+
+    def res(module, rtype, ident=None, tag=True, code=False):
+        body = {"resourceType": rtype}
+        if ident is not None:
+            body["identifier"] = [{"system": "s", "value": ident}]
+        if tag:
+            body["meta"] = {"tag": [{"code": "S"}]}
+        if code:
+            body["code"] = {"text": "c"}
+        return (module, rtype, json.dumps(body))
+
+    rows = (
+        [res("p", "Patient", "P1")] * 3  # one duplicate, three uses
+        + [res("p", "Patient", "P2"), res("s", "Specimen", "P2")]  # other type: no dup
+        + [res("s", "Specimen", "S1"), res("s", "Specimen", "S1", tag=False)]
+        + [res("p", "Patient"), res("p", "Patient", tag=False)]  # no identifier: no dup
+        + [res("o", "Observation", f"O{i}", code=i % 2 == 0) for i in range(5)]
+        + [res("o", "Observation", "O9", tag=False)] * 2
+        + [res("o", "Observation", tag=False)]
+    )
+    frame = spark.createDataFrame(
+        rows, "module string, resourceType string, resource_json string"
+    ).repartition(3)
+    want = {
+        "duplicate_identifiers": duplicate_identifiers(frame).count(),
+        "missing_meta_tag": missing_meta_tag(frame).count(),
+        "observations_without_code": observations_without_code(frame).count(),
+    }
+    assert want == {
+        "duplicate_identifiers": 3,
+        "missing_meta_tag": 5,
+        "observations_without_code": 5,
+    }
+    assert run_inspections(frame) == want
+    assert run_inspections(frame.limit(0)) == dict.fromkeys(want, 0)
 
 
 def test_read_bundle_json(spark, tmp_path):

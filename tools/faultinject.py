@@ -990,40 +990,51 @@ def run_exec_kill(spark, sf_dir: str) -> tuple[dict, bool]:
             return _canon(spark.read.parquet(out)), committed, temp_left
 
         try:
-            clean_tag, inj_tag = f"{name}.clean", f"{name}.inj"
+            clean_tag = f"{name}.clean"
             want, c_ok, c_tmp = _write_read(clean_tag, False)
-            got, i_ok, i_tmp = _write_read(inj_tag, True)
-            flag = os.path.join(marker_dir, f"{inj_tag}.fired")
-            fired = os.path.exists(flag)
-            killed_jvm_dead = False
-            if fired:
-                with open(flag) as fh:
-                    pid = int(fh.read().strip())
-                killed_jvm_dead = not os.path.exists(f"/proc/{pid}")
             clean_counts = _map_exec_counts(marker_dir, clean_tag)
-            inj_counts = _map_exec_counts(marker_dir, inj_tag)
-            reexec = sorted(
-                p for p, c in inj_counts.items() if c > clean_counts.get(p, 0)
-            )
-            entry = {
-                "match": want == got,
-                "fired": fired,
-                "killed_jvm_dead": killed_jvm_dead,
-                "clean_map_execs": clean_counts,
-                "injected_map_execs": inj_counts,
-                "reexecuted_map_partitions": reexec,
-                "committed_success_marker": c_ok and i_ok,
-                "temporary_residue": c_tmp or i_tmp,
-                "rows": len(want),
-            }
-            entry["ok"] = (
-                entry["match"]
-                and fired
-                and killed_jvm_dead
-                and bool(reexec)
-                and entry["committed_success_marker"]
-                and not entry["temporary_residue"]
-            )
+            # same bounded re-draw as _run: a kill whose victim held no
+            # map output the survivors need is vacuous (no re-execution
+            # to grade), so re-arm with a fresh tag; a mismatch never
+            # retries
+            for attempt in range(3):
+                inj_tag = f"{name}.inj" if attempt == 0 else f"{name}.inj{attempt}"
+                got, i_ok, i_tmp = _write_read(inj_tag, True)
+                flag = os.path.join(marker_dir, f"{inj_tag}.fired")
+                fired = os.path.exists(flag)
+                killed_jvm_dead = False
+                if fired:
+                    with open(flag) as fh:
+                        pid = int(fh.read().strip())
+                    killed_jvm_dead = not os.path.exists(f"/proc/{pid}")
+                inj_counts = _map_exec_counts(marker_dir, inj_tag)
+                reexec = sorted(
+                    p for p, c in inj_counts.items() if c > clean_counts.get(p, 0)
+                )
+                entry = {
+                    "match": want == got,
+                    "fired": fired,
+                    "killed_jvm_dead": killed_jvm_dead,
+                    "clean_map_execs": clean_counts,
+                    "injected_map_execs": inj_counts,
+                    "reexecuted_map_partitions": reexec,
+                    "committed_success_marker": c_ok and i_ok,
+                    "temporary_residue": c_tmp or i_tmp,
+                    "rows": len(want),
+                    "kill_draws": attempt + 1,
+                }
+                entry["ok"] = (
+                    entry["match"]
+                    and fired
+                    and killed_jvm_dead
+                    and bool(reexec)
+                    and entry["committed_success_marker"]
+                    and not entry["temporary_residue"]
+                )
+                vacuous_kill = entry["match"] and fired and killed_jvm_dead and not reexec
+                if entry["ok"] or not vacuous_kill:
+                    break
+                _wait_for_executors(spark, 2)  # let the worker respawn the JVM
             report[name] = entry
             ok = ok and entry["ok"]
         finally:
