@@ -12,7 +12,7 @@ Scale design: both are the same lookup. The (key, value) frame is folded
 into a single row holding ``map<key, value>``, that row is broadcast and
 cross-joined onto the fact side, and every looked-up column is one
 ``element_at`` in one projection. The plan is the same size whatever the
-size of the map (a literal ``create_map`` of N keys costs seconds of
+size of the map (a literal map expression of N keys costs seconds of
 driver-side plan construction per thousand keys), the fact side never
 shuffles, and plans that read the same table several times reuse one
 broadcast exchange.
