@@ -200,9 +200,12 @@ def cmd_play(args) -> int:
         out.write.mode("overwrite").partitionBy("module").parquet(res_dir)
         write_bundles(prepare_bundle_entries(spark.read.parquet(res_dir)), bundles_dir)
 
-    # a surviving manifest with a deleted output dir must not skip the
-    # rebuild — treat missing outputs as stale regardless of input mtimes
-    outputs_missing = not os.path.isdir(res_dir) or not os.path.isdir(bundles_dir)
+    # a surviving manifest with a deleted or half-written output dir must
+    # not skip the rebuild: an output without the writer's _SUCCESS marker
+    # counts as missing, whatever the input mtimes say
+    outputs_missing = not all(
+        os.path.exists(os.path.join(d, "_SUCCESS")) for d in (res_dir, bundles_dir)
+    )
     ran = run_if_stale(
         os.path.join(work, ".manifest-resources.json"), inputs, build,
         force=args.force or outputs_missing,

@@ -221,30 +221,6 @@ def _perm_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     return params
 
 
-def minhash_signature(
-    text: Column | str, num_hashes: int = 128, seed: int = 42, shingle_n: int = 3
-) -> Column:
-    """Per-row MinHash signature as a single Column expression (array
-    HOFs). Convenient for ad-hoc use; the *operator* path
-    (minhash_signatures) uses explode + columnar min() aggregation
-    instead — HOF lambda chains stay interpreted, while 64 plain min()
-    aggs run in whole-stage codegen, ~an order of magnitude faster."""
-    base = F.transform(
-        shingles(text, shingle_n), lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE))
-    )
-    sigs = []
-    for a, b in _perm_params(num_hashes, seed):
-        sigs.append(
-            F.array_min(
-                F.transform(
-                    base,
-                    lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MERSENNE)),
-                )
-            )
-        )
-    return F.array(*sigs)
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",

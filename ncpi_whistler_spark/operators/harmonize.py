@@ -8,14 +8,13 @@ carries the original display text. Every downstream Harmonize* variant
 the extractor's ``code_details`` map (wstlr/extractor.py:274-282) gives
 every column whose value is a harmony local code a ``<col>_display``.
 
-Scale design: both are the same lookup. The (key, value) frame is folded
-into a single row holding ``map<key, value>``, that row is broadcast and
-cross-joined onto the fact side, and every looked-up column is one
-``element_at`` in one projection. The plan is the same size whatever the
-size of the map (a literal map expression of N keys costs seconds of
-driver-side plan construction per thousand keys), the fact side never
-shuffles, and plans that read the same table several times reuse one
-broadcast exchange.
+Scale design: both are the same lookup, built from what the driver-side
+harmony reader (sources/harmony.py) returned. The Python dict becomes a
+one-row ``map<string, T>`` frame, that row is broadcast and cross-joined
+onto the fact side, and every looked-up column is one ``element_at`` in
+one projection. The plan is the same size whatever the size of the map (a
+literal map expression of N keys costs seconds of driver-side plan
+construction per thousand keys), and the fact side never shuffles.
 """
 
 from __future__ import annotations
@@ -23,18 +22,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ncpi_whistler_spark.sources.harmony import ConceptMap
+from ncpi_whistler_spark.sources.harmony import CODINGS_TYPE, ConceptMap
 
 _MAP = "__lookup_map"
 
 
-def _lookup(df: DataFrame, entries: DataFrame, keys: dict[str, Column]) -> DataFrame:
-    """Add one column per ``keys`` item: the value ``entries`` (a (key,
-    value) frame with unique keys) holds for that key, NULL on a miss."""
-    k, v = entries.columns
-    # map_from_entries rejects a null key; a null value never matches one
-    lookup = entries.where(F.col(k).isNotNull()).agg(
-        F.map_from_entries(F.collect_list(F.struct(k, v))).alias(_MAP)
+def _lookup(
+    df: DataFrame, entries: dict, value_type: str, keys: dict[str, Column]
+) -> DataFrame:
+    """Add one column per ``keys`` item: the ``value_type`` value that
+    ``entries`` holds for that key, NULL on a miss."""
+    # a map key cannot be null; a null value never matches one
+    lookup = df.sparkSession.createDataFrame(
+        [({k: v for k, v in entries.items() if k is not None},)],
+        f"{_MAP} map<string, {value_type}>",
     )
     out = df.crossJoin(F.broadcast(lookup))
     return out.withColumns(
@@ -56,13 +57,11 @@ def harmonize(
     codings for (value, local_system). Unmapped values get an empty array
     (whistle returns nil; empty array keeps downstream HOFs total)."""
     value = F.col(value_col) if isinstance(value_col, str) else value_col
-    empty = F.array().cast("array<struct<code:string,display:string,system:string>>")
-    codings = (
-        concept_map.codings_df()
-        .where(F.col("local_system") == local_system)
-        .select("local_code", "codings")
-    )
-    out = _lookup(df, codings, {output_col: value})
+    codings = {
+        lc: c for (ls, lc), c in concept_map.codings().items() if ls == local_system
+    }
+    out = _lookup(df, codings, CODINGS_TYPE, {output_col: value})
+    empty = F.array().cast(CODINGS_TYPE)
     return out.withColumn(output_col, F.coalesce(F.col(output_col), empty))
 
 
@@ -81,8 +80,4 @@ def add_display_columns(
     """
     if not code_details:
         return df
-    spark = df.sparkSession
-    entries = spark.createDataFrame(
-        list(code_details.items()), "local_code string, display string"
-    )
-    return _lookup(df, entries, {c + suffix: F.col(c) for c in columns})
+    return _lookup(df, code_details, "string", {c + suffix: F.col(c) for c in columns})

@@ -87,16 +87,6 @@ def value_counts(
     )
 
 
-def duplicate_keys(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """E8: duplicate-identifier check (wstlr/inspector.py:27-63) — keys
-    appearing more than once, with their multiplicity."""
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-    )
-
-
 def hll60_distinct(
     df: DataFrame,
     group_cols: list[str],

@@ -463,33 +463,6 @@ def winnowing_shared_pairs(
     )
 
 
-def winnowing_fingerprints(text: Column | str, window: int = 8, keep_every: int = 4) -> Column:
-    """Sparse document fingerprint: xxhash64 of each ``window``-gram of the
-    normalized text, keeping hashes ≡ 0 (mod keep_every) — the standard
-    mod-p selection variant of winnowing (deterministic, order-free)."""
-    c = normalized_text(text)
-    n = F.length(c)
-    idx = F.when(n >= window, F.sequence(F.lit(1), n - window + 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    hashes = F.transform(idx, lambda i: F.xxhash64(F.substr(c, i, F.lit(window))))
-    return F.array_distinct(F.filter(hashes, lambda h: h % keep_every == 0))
-
-
-def doc_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-document stats projection — the text-analysis 'profile' pass."""
-    return df.select(
-        id_col,
-        token_count(text_col).cast("long").alias("n_tokens"),
-        F.length(text_col).cast("long").alias("n_chars"),
-        F.round(avg_token_len(text_col), 6).alias("avg_token_len"),
-        F.round(punct_ratio(text_col), 6).alias("punct_ratio"),
-        lang_guess(text_col).alias("lang_guess"),
-        quality_bucket(text_col).alias("quality"),
-        fingerprint(text_col).alias("fingerprint"),
-    )
-
-
 def chunk_tokens(
     df: DataFrame,
     text_col: str = "text",

@@ -12,6 +12,7 @@ deciding *whether* to run a Spark job must not itself be a Spark job.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
@@ -52,8 +53,12 @@ class BuildManifest:
             current[p] = _fingerprint(p)
         return recorded.get("inputs") == current
 
-    def record(self, inputs: list[str]) -> None:
-        data = {"inputs": {p: _fingerprint(p) for p in inputs}}
+    def record(self, inputs: list[str], fingerprints: dict | None = None) -> None:
+        """Persist the inputs' fingerprints; ``fingerprints`` when given
+        (taken earlier), else taken now."""
+        if fingerprints is None:
+            fingerprints = {p: _fingerprint(p) for p in inputs}
+        data = {"inputs": fingerprints}
         os.makedirs(os.path.dirname(self.manifest_path) or ".", exist_ok=True)
         with open(self.manifest_path, "w") as fh:
             json.dump(data, fh, indent=2)
@@ -63,10 +68,18 @@ def run_if_stale(
     manifest_path: str, inputs: list[str], build_fn, force: bool = False
 ) -> bool:
     """Run ``build_fn()`` only when inputs changed since the last recorded
-    build. Returns True when the build ran."""
+    build. Returns True when the build ran.
+
+    The manifest is deleted before the build, so an interrupted build
+    leaves none and the next call rebuilds. The one written after the
+    build holds the fingerprints taken before it, so an input edited
+    while the build ran reads as changed next time."""
     manifest = BuildManifest(manifest_path)
     if manifest.is_current(inputs, force=force):
         return False
+    fingerprints = {p: _fingerprint(p) for p in inputs}
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(manifest_path)
     build_fn()
-    manifest.record(inputs)
+    manifest.record(inputs, fingerprints)
     return True

@@ -5502,10 +5502,3 @@ DRIVER_REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
 def names() -> list[str]:
     return list(REGISTRY)
 
-
-def spark_queries() -> dict[str, QueryFn]:
-    return {k: v[0] for k, v in REGISTRY.items()}
-
-
-def oracle_queries() -> dict[str, str]:
-    return {k: v[1] for k, v in REGISTRY.items() if v[1] is not None}

@@ -60,6 +60,17 @@ STATE_STORE_PROVIDERS: dict[str, str] = {
 }
 
 
+def _local_driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else the smaller of 32g and half the
+    host's physical memory: a heap the host cannot back grows without GC
+    pressure until the kernel kills the JVM."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(32 * 1024, half_mb)}m"
+
+
 def _new_session(
     app_name: str, master: str | None, explicit: dict[str, str]
 ) -> SparkSession:
@@ -89,9 +100,7 @@ def _new_session(
         # In local mode the driver JVM IS the executor; Spark's 1g default
         # heap OOMs real workloads (first seen: 20k-doc shingle join).
         # Static conf — only effective for the session that starts the JVM.
-        defaults["spark.driver.memory"] = os.environ.get(
-            "SPARK_GRAFT_DRIVER_MEM", "32g"
-        )
+        defaults["spark.driver.memory"] = _local_driver_memory()
         # ~90 registry queries x whole-stage codegen ≈ thousands of
         # generated classes; HotSpot's 240m default code cache fills and
         # silently stops JIT-compiling (later queries run interpreted).
@@ -152,15 +161,4 @@ def get_spark(
             "spark.sql.streaming.stateStore.providerClass",
             STATE_STORE_PROVIDERS.get(state_store, state_store),
         )
-    return spark
-
-
-def apply_engine_conf(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine conf to an externally-created session
-    (e.g. the verification driver's). Static conf is skipped silently."""
-    for k, v in ENGINE_CONF.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
     return spark

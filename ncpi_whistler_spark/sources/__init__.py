@@ -1,7 +1,7 @@
 """Sources: normalized CSV scans, data dictionaries, harmony ConceptMaps."""
 
 from ncpi_whistler_spark.sources.csv_source import scan_csv
-from ncpi_whistler_spark.sources.harmony import ConceptMap, scan_harmony_csv
+from ncpi_whistler_spark.sources.harmony import ConceptMap
 from ncpi_whistler_spark.sources.dd import DataDictionary
 
-__all__ = ["scan_csv", "ConceptMap", "scan_harmony_csv", "DataDictionary"]
+__all__ = ["scan_csv", "ConceptMap", "DataDictionary"]

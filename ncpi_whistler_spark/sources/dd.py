@@ -9,12 +9,18 @@ wstlr/dd/csv_parser.py:11-52) or a single JSON data model
 Here a DD compiles to a Spark ``StructType`` whose per-field ``Metadata``
 carries description/enumerations/units/min/max, plus helpers the plan
 compiler uses: the varname rename map (P1) and typed-cast expressions.
-Parsing is driver-side (schemas are tiny); files are read through Spark so
-any Hadoop-compatible filesystem works.
+Parsing is driver-side, as in the reference: DDs are a few KB, and the
+``csv`` module reads RFC 4180 quoting (doubled quotes, quoted newlines in
+enumerations) from a local path or an http(s) URL alike.
 """
 
 from __future__ import annotations
 
+import csv
+import io
+import re
+import tempfile
+import urllib.request
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,21 +45,16 @@ def open_dd_file(filename: str):
     """Open a DD source from a local path OR an http(s) URL — the
     reference's loader contract (wstlr/dd/loader.py:51-65: URLs are
     fetched and spooled to a temp file; anything else opens locally).
-    Driver-side by design: DDs are plan-time metadata, a few KB."""
-    import re
-    import tempfile
-    import urllib.request
-
+    Text mode for the ``csv`` module (no newline translation), with a
+    leading UTF-8 BOM dropped."""
     if re.search(r"^http[s]*:", filename):
         with urllib.request.urlopen(filename) as resp:  # noqa: S310
             body = resp.read()
         file = tempfile.TemporaryFile()
         file.write(body)
         file.seek(0)
-        import io
-
-        return io.TextIOWrapper(file, encoding="utf-8")
-    return open(filename, "rt")
+        return io.TextIOWrapper(file, encoding="utf-8-sig", newline="")
+    return open(filename, encoding="utf-8-sig", newline="")
 
 
 #: base alternate-name map (reference: wstlr/dd/loader.py:43-49)
@@ -225,20 +226,11 @@ class DataDictionary:
 
     @classmethod
     def from_csv(cls, spark: SparkSession, path: str, table_name: str) -> "DataDictionary":
-        """Parse a DD CSV from a local path, any Spark-readable filesystem,
-        or an http(s) URL (S5 URL path, wstlr/dd/loader.py:51-65)."""
-        import re
-
-        if re.search(r"^http[s]*:", path):
-            import csv as _csv
-
-            with open_dd_file(path) as fh:
-                rows = list(_csv.DictReader(fh))
-            return cls.from_rows(table_name, rows)
-        rows = (
-            spark.read.option("header", True).csv(path).na.fill("").collect()
-        )
-        return cls.from_rows(table_name, [r.asDict() for r in rows])
+        """Parse a DD CSV from a local path or an http(s) URL (S5 URL
+        path, wstlr/dd/loader.py:51-65). ``spark`` is unused: the file is
+        read on the driver."""
+        with open_dd_file(path) as fh:
+            return cls.from_rows(table_name, list(csv.DictReader(fh)))
 
     @classmethod
     def from_json_path(cls, path: str, table_name: str) -> "DataDictionary":
@@ -356,8 +348,6 @@ class DataDictionary:
     def to_csv(self, path: str) -> None:
         """S12: DD → CSV file (the JsonParser.convert_to_csv analog,
         wstlr/dd/json_parser.py:54-87). Driver-side — DDs are tiny."""
-        import csv
-
         with open(path, "w", newline="") as fh:
             w = csv.writer(fh)
             w.writerow(

@@ -7,27 +7,28 @@ the 4-tuple (local system, local code, system, code), curie-prefix target
 codes, and emit a nested ConceptMap with an implicit ``self`` group whose
 display is the local text.
 
-Spark design: the ConceptMap is a mapping DataFrame whose deduplicated
-rows are collected to the driver once (``_collected``) — the harmony
-ConceptMap and ValueSet resources are single rows holding every edge, so
-they are built from that list. ``codings_df()`` pre-groups the frame to
-one row per (local_code, local_system) with a deterministically-sorted
-``array<struct<code,display,system>>``; ``operators.harmonize`` folds the
-rows of one local_system into a single broadcast map, so harmonizing a
-100 TB fact column is a map lookup with no shuffle of the fact side, and
-the plan does not grow with the map. ``read_code_details`` reads the
-extractor's value-keyed display map, which ``add_display_columns`` looks
-up the same way.
+Harmony files are config-scale, so, as in the reference, they are read on
+the driver with the ``csv`` module, by one reader (``read_harmony_csv``):
+RFC 4180 quoting (doubled quotes, quoted newlines), a UTF-8 BOM dropped,
+headers lowercased and stripped, file order kept. Everything else is built
+from the rows it returns, without a Spark job:
+
+- ``ConceptMap`` keeps the deduplicated mapping rows (``_collected``),
+  which the harmony ConceptMap and ValueSet resources are built from, and
+  groups them per (local_system, local_code) into the sorted codings that
+  ``operators.harmonize`` looks up;
+- ``read_code_details`` gives the extractor's value-keyed display map;
+- ``whistle_harmony_obj`` gives the whistle-input document's harmony
+  object.
 """
 
 from __future__ import annotations
 
-from typing import Mapping
+import csv
+from typing import Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ncpi_whistler_spark.functions.core import curie_prefix_col
 from ncpi_whistler_spark.functions.harmonize import SELF_SYSTEM
 
 #: harmony CSV headers → engine column names
@@ -39,72 +40,90 @@ _HARMONY_COLS = {
     "display": "display",
     "code system": "system",
 }
+#: the six mapping columns, in ``from_rows``' tuple order
+_MAPPING_COLS = tuple(_HARMONY_COLS.values())
 #: optional grouping columns (the harmony ValueSets, G5); ConceptMap
 #: defaults them to "" — the reference's value for absent columns
 _OPTIONAL_COLS = ("table_name", "parent_varname")
+#: the type of ``harmonize``'s output column and of ``codings_df().codings``
+CODINGS_TYPE = "array<struct<code:string,display:string,system:string>>"
 
 
-def scan_harmony_csv(spark: SparkSession, paths: str | list[str]) -> DataFrame:
-    """Scan harmony CSV(s) into the normalized mapping frame
-    (reference column contract: docs/ref/harmony_files.md:6-32)."""
+def read_harmony_csv(
+    paths: str | list[str], required: Iterable[str] = tuple(_HARMONY_COLS)
+) -> list[dict[str, str | None]]:
+    """Every row of the harmony CSV(s), in file order, keyed by the
+    lowercased, stripped header (reference column contract:
+    docs/ref/harmony_files.md:6-32). A comma-separated string names
+    several files. A field missing from a short row is None; an empty one
+    is "". Raises ValueError when a file lacks a ``required`` column."""
     if isinstance(paths, str):
         paths = [p.strip() for p in paths.split(",") if p.strip()]
-    raw = (
-        spark.read.option("header", True).option("quote", '"').csv(paths)
-    )
-    lower = {c.lower().strip(): c for c in raw.columns}
-    missing = [k for k in _HARMONY_COLS if k not in lower]
-    if missing:
-        raise ValueError(f"harmony file missing required columns: {missing}")
-    cols = [F.col(lower[src]).alias(dst) for src, dst in _HARMONY_COLS.items()]
-    cols += [F.col(lower[opt]).alias(opt) for opt in _OPTIONAL_COLS if opt in lower]
-    return raw.select(*cols)
+    rows: list[dict[str, str | None]] = []
+    for path in paths:
+        with open(path, newline="", encoding="utf-8-sig") as fh:
+            reader = csv.DictReader(fh)
+            reader.fieldnames = [h.strip().lower() for h in reader.fieldnames or []]
+            missing = [c for c in required if c not in reader.fieldnames]
+            if missing:
+                raise ValueError(f"harmony file missing required columns: {missing}")
+            rows.extend(reader)
+    return rows
+
+
+def curie_prefixed(code: str | None, system: str | None, curies: Mapping[str, str]) -> str | None:
+    """``<CURIE>:code`` when the code's system has a curie, else the code
+    (F6, wstlr/conceptmap.py:83-85)."""
+    curie = curies.get(system)
+    return code if curie is None or code is None else f"{curie}:{code}"
 
 
 def read_code_details(paths: str | list[str]) -> dict[str, str]:
     """The extractor's code_details map: local code → display, last
     occurrence wins, keyed by VALUE ONLY (not scoped per column) —
-    reference-exact (wstlr/extractor.py:274-282). Driver-side: harmony
-    files are config-scale and the last-wins rule depends on file order."""
-    import csv
+    reference-exact (wstlr/extractor.py:274-282). The last-wins rule
+    depends on file order."""
+    return {
+        row["local code"]: row.get("display", "")
+        for row in read_harmony_csv(paths, required=("local code",))
+    }
 
-    if isinstance(paths, str):
-        paths = [p.strip() for p in paths.split(",") if p.strip()]
-    details: dict[str, str] = {}
-    for path in paths:
-        with open(path, newline="") as fh:
-            for row in csv.DictReader(fh, delimiter=",", quotechar='"'):
-                row = {(k or "").lower(): v for k, v in row.items()}
-                details[row["local code"]] = row.get("display", "")
-    return details
+
+def _coding_order(coding: tuple) -> tuple:
+    # array_sort's ascending struct order: field by field, nulls first;
+    # str order is Spark's UTF-8 binary order
+    return tuple((x is not None, x or "") for x in coding)
 
 
 class ConceptMap:
-    """A harmonization dictionary backed by a small mapping DataFrame.
+    """A harmonization dictionary: its mapping rows, held on the driver.
 
-    ``mappings`` columns: local_code, text, local_system, code, display,
-    system, table_name, parent_varname — one row per (local → target)
-    edge, already deduped; the two grouping columns are "" when absent.
+    Each row is a dict with local_code, text, local_system, code, display,
+    system, table_name and parent_varname: one (local → target) edge,
+    the first in file order of each (local_system, local_code, system,
+    code) (A5, wstlr/conceptmap.py:410-428), its code curie-prefixed
+    after the dedupe; the two grouping columns are "" when absent.
     """
 
-    def __init__(self, mappings: DataFrame, curies: Mapping[str, str] | None = None):
-        for opt in _OPTIONAL_COLS:
-            mappings = mappings.withColumn(
-                opt,
-                F.coalesce(F.col(opt), F.lit(""))
-                if opt in mappings.columns
-                else F.lit(""),
-            )
-        mappings = mappings.dropDuplicates(
-            ["local_system", "local_code", "system", "code"]
-        )  # A5, wstlr/conceptmap.py:410-428
-        if curies:
-            mappings = mappings.withColumn(
-                "code", curie_prefix_col(F.col("code"), F.col("system"), curies)
-            )  # F6, wstlr/conceptmap.py:83-85
-        self.mappings = mappings
-        # driver-side cache of _collected()
-        self._rows: list | None = None
+    def __init__(
+        self,
+        spark: SparkSession,
+        rows: Iterable[Mapping[str, str | None]],
+        curies: Mapping[str, str] | None = None,
+    ):
+        self.spark = spark
+        self._rows: list[dict[str, str | None]] = []
+        seen: set[tuple] = set()
+        for row in rows:
+            key = (row["local_system"], row["local_code"], row["system"], row["code"])
+            if key in seen:
+                continue
+            seen.add(key)
+            r = {c: row[c] for c in _MAPPING_COLS}
+            r.update({c: row.get(c) or "" for c in _OPTIONAL_COLS})
+            if curies:
+                r["code"] = curie_prefixed(r["code"], r["system"], curies)
+            self._rows.append(r)
 
     @classmethod
     def from_csv(
@@ -113,7 +132,14 @@ class ConceptMap:
         paths: str | list[str],
         curies: Mapping[str, str] | None = None,
     ) -> "ConceptMap":
-        return cls(scan_harmony_csv(spark, paths), curies)
+        """From harmony CSV(s); an empty mapping field is None."""
+        cols = {**_HARMONY_COLS, **{c: c for c in _OPTIONAL_COLS}}
+        rows = read_harmony_csv(paths)
+        return cls(
+            spark,
+            ({dst: line.get(src) or None for src, dst in cols.items()} for line in rows),
+            curies,
+        )
 
     @classmethod
     def from_rows(
@@ -124,65 +150,37 @@ class ConceptMap:
     ) -> "ConceptMap":
         """Build from (local_code, text, local_system, code, display,
         system) tuples — used for config-literal maps and tests."""
-        df = spark.createDataFrame(
-            rows,
-            "local_code string, text string, local_system string, "
-            "code string, display string, system string",
-        )
-        cm = cls(df, curies)
-        if not curies:
-            # rows are already on the driver — prefill the cache so
-            # _collected() never runs a Spark job (same keep-one dedupe
-            # as __init__'s dropDuplicates)
-            seen: set[tuple] = set()
-            deduped = []
-            for lc, text, ls, code, display, system in rows:
-                k = (ls, lc, system, code)
-                if k in seen:
-                    continue
-                seen.add(k)
-                deduped.append(
-                    {
-                        "local_code": lc,
-                        "text": text,
-                        "local_system": ls,
-                        "code": code,
-                        "display": display,
-                        "system": system,
-                        **dict.fromkeys(_OPTIONAL_COLS, ""),
-                    }
-                )
-            cm._rows = deduped
-        return cm
+        return cls(spark, (dict(zip(_MAPPING_COLS, r)) for r in rows), curies)
+
+    def codings(self) -> dict[tuple[str | None, str | None], list[tuple]]:
+        """(local_system, local_code) → all target (code, display, system)
+        codings *plus* the self coding (code=local_code, display=the first
+        text, system='self'; reference: wstlr/conceptmap.py:445-447).
+
+        Each list is sorted by (code, display, system), nulls first — the
+        order ``array_sort`` gives the struct array. The reference relies
+        on file order (A7, wstlr/conceptmap.py:455-469); the sort keeps
+        the order explicit and independent of the row order.
+        """
+        groups: dict[tuple, list[tuple]] = {}
+        for r in self._rows:
+            key = (r["local_system"], r["local_code"])
+            if key not in groups:
+                groups[key] = [(r["local_code"], r["text"], SELF_SYSTEM)]
+            groups[key].append((r["code"], r["display"], r["system"]))
+        for codings in groups.values():
+            codings.sort(key=_coding_order)
+        return groups
 
     def codings_df(self) -> DataFrame:
-        """One row per (local_code, local_system) with all target codings
-        *plus* the self coding (code=local_code, display=text,
-        system='self'; reference: wstlr/conceptmap.py:445-447).
-
-        The array is sorted by struct order (code, display, system), nulls
-        first — the reference relies on file order (A7,
-        wstlr/conceptmap.py:455-469); a distributed engine needs an
-        explicit deterministic order instead.
-        """
-        self_coding = F.struct(
-            F.col("local_code").alias("code"),
-            F.first("text").alias("display"),
-            F.lit(SELF_SYSTEM).alias("system"),
-        )
-        return self.mappings.groupBy("local_code", "local_system").agg(
-            F.array_sort(
-                F.concat(
-                    F.collect_list(F.struct("code", "display", "system")),
-                    F.array(self_coding),
-                )
-            ).alias("codings")
+        """``codings()`` as a (local_code, local_system, codings) frame."""
+        return self.spark.createDataFrame(
+            [(lc, ls, codings) for (ls, lc), codings in self.codings().items()],
+            f"local_code string, local_system string, codings {CODINGS_TYPE}",
         )
 
-    def _collected(self) -> list:
-        """Every deduplicated mapping row, collected to the driver once."""
-        if self._rows is None:
-            self._rows = self.mappings.collect()
+    def _collected(self) -> list[dict[str, str | None]]:
+        """Every deduplicated mapping row."""
         return self._rows
 
 
@@ -202,47 +200,39 @@ def whistle_harmony_obj(
     value-set components with curie-prefixed codes, last-wins target
     codings, first-wins mapping elements, file order preserved).
 
-    Driver-side by design: this object IS part of the single JSON
-    inter-stage document (S8), and harmony files are config-scale. The
-    engine's scale path — the broadcast ConceptMap DataFrame — never
-    routes through here.
+    This object IS part of the single JSON inter-stage document (S8).
+    Like the reference's ``line['table_name']``, a file without the
+    table_name or parent_varname column raises.
     """
-    import csv
-
     from ncpi_whistler_spark.functions.core import dd_system_url
 
     curies = curies or {}
-
-    def prefixed(code: str, system: str) -> str:
-        return f"{curies[system]}:{code}" if system in curies else code
-
     vs_sources: dict[tuple[str, str, str], list[dict]] = {}
     targets: dict[str, dict[str, dict]] = {}
     mappings: dict[str, dict] = {}
-    with open(path, newline="") as fh:
-        for line in csv.DictReader(fh, delimiter=",", quotechar='"'):
-            table = line["table_name"]
-            if table.strip() == "":
-                continue
-            local_cs, local_code = line["local code system"], line["local code"]
-            target_cs, target_code = line["code system"], line["code"]
-            parent = line["parent_varname"]
+    for line in read_harmony_csv(path, required=(*_HARMONY_COLS, *_OPTIONAL_COLS)):
+        table = line["table_name"]
+        if (table or "").strip() == "":
+            continue
+        local_cs, local_code = line["local code system"], line["local code"]
+        target_cs, target_code = line["code system"], line["code"]
+        parent = line["parent_varname"]
 
-            vs_sources.setdefault((local_cs, table, parent), []).append(
-                {"code": prefixed(local_code, local_cs), "display": line["text"]}
-            )
-            targets.setdefault(target_cs, {})[target_code] = {
-                "code": prefixed(target_code, target_cs),
-                "display": line["display"],
-            }
-            m = mappings.setdefault(
-                local_cs, {"table": table, "parent": parent, "group": {}}
-            )
-            codes = m["group"].setdefault(target_cs, {})
-            el = codes.setdefault(
-                local_code, {"display": line["text"], "target": {}}
-            )
-            el["target"][target_code] = line["display"]
+        vs_sources.setdefault((local_cs, table, parent), []).append(
+            {"code": curie_prefixed(local_code, local_cs, curies), "display": line["text"]}
+        )
+        targets.setdefault(target_cs, {})[target_code] = {
+            "code": curie_prefixed(target_code, target_cs, curies),
+            "display": line["display"],
+        }
+        m = mappings.setdefault(
+            local_cs, {"table": table, "parent": parent, "group": {}}
+        )
+        codes = m["group"].setdefault(target_cs, {})
+        el = codes.setdefault(
+            local_code, {"display": line["text"], "target": {}}
+        )
+        el["target"][target_code] = line["display"]
 
     obj: dict = {"source_codes": [], "target_codes": [], "mappings": []}
     for (local_cs, table, parent), codes in vs_sources.items():

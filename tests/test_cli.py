@@ -396,3 +396,23 @@ def test_cli_play_end_to_end_with_incremental_skip(spark, study_dir, tmp_path, c
     rc = cli.main(["play", str(study_dir / "study.yaml"), "--workdir", work, "--force"])
     out4 = capsys.readouterr().out
     assert rc == 0 and "rebuilt" in out4
+
+
+def test_cli_play_rebuilds_after_an_interrupted_write(spark, study_dir, tmp_path, capsys):  # noqa: F811
+    """A play killed while writing leaves resources/ with only the
+    writer's _temporary directory and no _SUCCESS marker; the next plain
+    play rebuilds instead of trusting the manifest."""
+    import os
+    import shutil
+
+    work = str(tmp_path / "work")
+    assert cli.main(["play", str(study_dir / "study.yaml"), "--workdir", work]) == 0
+    capsys.readouterr()
+    res_dir = os.path.join(work, "resources")
+    shutil.rmtree(res_dir)
+    os.makedirs(os.path.join(res_dir, "_temporary", "0"))
+
+    rc = cli.main(["play", str(study_dir / "study.yaml"), "--workdir", work])
+    out = capsys.readouterr().out
+    assert rc == 0 and "rebuilt" in out
+    assert os.path.exists(os.path.join(res_dir, "_SUCCESS"))

@@ -38,3 +38,31 @@ def test_missing_input_is_stale(tmp_path):
     assert m.is_current([str(src)])
     os.remove(src)
     assert not m.is_current([str(src)])
+
+
+def test_interrupted_build_leaves_no_manifest(tmp_path):
+    src = tmp_path / "input.csv"
+    src.write_text("a\n1\n")
+    manifest = str(tmp_path / "out.manifest.json")
+    assert run_if_stale(manifest, [str(src)], lambda: None) is True
+
+    def crash():
+        raise KeyboardInterrupt
+
+    try:
+        run_if_stale(manifest, [str(src)], crash, force=True)
+    except KeyboardInterrupt:
+        pass
+    # the forced build died: the old manifest must not vouch for its output
+    assert not os.path.exists(manifest)
+    assert run_if_stale(manifest, [str(src)], lambda: None) is True
+
+
+def test_input_edited_during_build_reads_as_changed(tmp_path):
+    src = tmp_path / "input.csv"
+    src.write_text("a\n1\n")
+    manifest = str(tmp_path / "out.manifest.json")
+    # the build saw the old content; the edit lands while it runs
+    assert run_if_stale(manifest, [str(src)], lambda: src.write_text("a\n2\n")) is True
+    assert run_if_stale(manifest, [str(src)], lambda: None) is True
+    assert run_if_stale(manifest, [str(src)], lambda: None) is False

@@ -128,6 +128,61 @@ def test_harmonize_function_family(spark):
     assert rows["P3"]["code"] is None
 
 
+SELECTOR_CODINGS = [
+    ("male", "Male", "http://hl7.org/fhir/administrative-gender"),
+    ("M", "Male(v2)", "http://terminology.hl7.org/CodeSystem/v2-0001-unharmonized"),
+    ("1", "Male", H.SELF_SYSTEM),
+    ("C20197", "Male", "http://ncicb.nci.nih.gov/xml/owl/EVS/Thesaurus.owl"),
+    ("248153007", "Male", "http://snomed.info/sct"),
+]
+
+
+@pytest.mark.parametrize("codings", [SELECTOR_CODINGS, []])
+def test_harmonize_selectors_match_python(spark, codings):
+    import re
+
+    df = spark.createDataFrame(
+        [(codings,)], "c array<struct<code:string,display:string,system:string>>"
+    )
+    (row,) = df.select(
+        H.harmonize_as_coding("c").alias("as_coding"),
+        H.harmonize_select_by_prefix("c", "http://hl7.org/").alias("by_prefix"),
+        H.harmonize_with_filter("c", "terminology|nci").alias("filtered"),
+    ).collect()
+
+    def got(arr):
+        return [tuple(c) for c in arr]
+
+    # H5 (_harmonize_as_coding.wstl:8-10): {coding: the mapped codings},
+    # i.e. neither self nor a *-unharmonized system, in array order
+    assert got(row["as_coding"]["coding"]) == [
+        c for c in codings if c[2] != H.SELF_SYSTEM and not c[2].endswith("-unharmonized")
+    ]
+    # H7 (_harmonize_select_by_prefix.wstl:2-5): system starts with the prefix
+    assert got(row["by_prefix"]) == [c for c in codings if c[2].startswith("http://hl7.org/")]
+    # H7 (_harmonize_with_filter.wstl:3-6): the regex matches the system
+    assert got(row["filtered"]) == [c for c in codings if re.search("terminology|nci", c[2])]
+
+
+def test_valueset_url_and_dotted_id(spark):
+    rows = [
+        ("https://ig/CodeSystem/data-dictionary/study/sex", "study", "participant", "sex"),
+        ("https://ig/ValueSet/x", "s", "t", "v"),
+        ("https://ig/CodeSystem/a/CodeSystem/b", "a.b", "", "c"),
+    ]
+    df = spark.createDataFrame(rows, "url string, study string, tbl string, var string")
+    got = df.select(
+        H.convert_for_valueset_url("url").alias("vs"),
+        H.dotted_id("study", F.col("tbl"), "var").alias("id"),
+    ).collect()
+    for (url, *parts), r in zip(rows, got):
+        # H12 (_convert_for_valueset_url.wstl:4-6): every /CodeSystem/
+        # segment becomes /ValueSet/
+        assert r["vs"] == url.replace("/CodeSystem/", "/ValueSet/")
+        # H13 (_build_terminology_id.wstl:8-19): the parts joined by dots
+        assert r["id"] == ".".join(parts)
+
+
 def test_display_columns(spark):
     # reference-exact global value-keyed map
     out = add_display_columns(
@@ -253,7 +308,7 @@ def test_curie_prefixing(spark):
         [("seiz", "Seizure", "dx", "0001250", "Seizure", "http://purl.obolibrary.org/obo/hp.owl")],
         curies={"http://purl.obolibrary.org/obo/hp.owl": "HP"},
     )
-    row = cm.mappings.collect()[0]
+    (row,) = cm._collected()
     assert row["code"] == "HP:0001250"
 
 

@@ -14,7 +14,7 @@ import threading
 
 import pytest
 
-from ncpi_whistler_spark import cli
+from ncpi_whistler_spark import cli, session
 from ncpi_whistler_spark.session import ENGINE_CONF, get_spark
 
 WIDTH = "spark.sql.shuffle.partitions"
@@ -116,3 +116,24 @@ def test_get_spark_keeps_spark_submit_master(tmp_path):
     # the local[$SPARK_GRAFT_CPUS] default
     got = _submit(tmp_path, ["spark.master"], "--master", "local[2]")
     assert got["spark.master"] == "local[2]"
+
+
+def _host_with(monkeypatch, gib: int) -> None:
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**30 // 4096}
+    monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+
+
+def test_local_driver_heap_is_half_the_host_up_to_32g(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    _host_with(monkeypatch, 16)
+    assert session._local_driver_memory() == "8192m"
+    _host_with(monkeypatch, 15)
+    assert session._local_driver_memory() == "7680m"
+    _host_with(monkeypatch, 256)
+    assert session._local_driver_memory() == "32768m"
+
+
+def test_local_driver_heap_env_override_wins(monkeypatch):
+    _host_with(monkeypatch, 16)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "48g")
+    assert session._local_driver_memory() == "48g"
